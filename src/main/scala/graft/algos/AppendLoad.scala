@@ -3,6 +3,7 @@ package graft.algos
 import graft.core.Algorithm
 import graft.fsops.FsOps
 import graft.io.{AtomicWriter, DataFormat, LoadMode}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -81,8 +82,16 @@ class AppendLoad(val spark: SparkSession, fsOps: FsOps, p: AppendLoadParams)
     else dataSchema
 
   override def read(): Vector[DataFrame] = {
-    val files = fsOps.listFilesRecursive(p.sourceDir)
-      .filterNot(f => f.endsWith("_SUCCESS") || f.contains("/."))
+    // hidden (`.`-prefixed) names count only BELOW source_dir: the source
+    // itself may sit under a dot-directory
+    val sourceDepth = {
+      val sp = new Path(p.sourceDir)
+      fsOps.fs(sp).makeQualified(sp).depth()
+    }
+    val files = fsOps.listFilesRecursive(p.sourceDir).filterNot { f =>
+      f.endsWith("_SUCCESS") || Iterator.iterate(new Path(f))(_.getParent)
+        .takeWhile(_.depth() > sourceDepth).exists(_.getName.startsWith("."))
+    }
     val byHeader = files.groupBy(headerPathFor)
     val withSchemas = byHeader.toSeq.map { case (hp, group) =>
       (schemaForGroup(hp, group), group)

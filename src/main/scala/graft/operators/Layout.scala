@@ -85,11 +85,11 @@ object Layout {
     * The manifest lands through the ATOMIC writer (temp → swap →
     * restore-on-failure); it is DERIVED state — if a crash ever leaves
     * it out of step with the data directory, rerunning this rebuilds it
-    * from the footers.
+    * from the footers. Returns the directory's total row count.
     */
   def writeManifest(spark: org.apache.spark.sql.SparkSession,
       path: String, cols: Seq[(String, String)],
-      manifestPath: String): Unit = {
+      manifestPath: String): Long = {
     require(cols.nonEmpty, "at least one manifest column")
     import org.apache.hadoop.fs.{FileSystem, Path => HPath}
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -141,16 +141,17 @@ object Layout {
       new graft.fsops.FsOps(conf), Seq.empty, None)
       .write(manifest, graft.io.DataFormat.Parquet, manifestPath,
         graft.io.LoadMode.OverwriteTable)
+    rows.map(_.getLong(1 + 2 * cols.size)).sum
   }
 
   /** [[writeSorted]] plus the 1-D data-skipping manifest (file, lo, hi,
     * n_rows) — the file-level min/max index a lakehouse table format
     * keeps in metadata, externalized as a tiny parquet a reader can
-    * consult before opening any footer.
+    * consult before opening any footer. Returns the rows written.
     */
   def writeSortedWithManifest(spark: org.apache.spark.sql.SparkSession,
       df: DataFrame, path: String, sortCol: String, numFiles: Int,
-      manifestPath: String): Unit = {
+      manifestPath: String): Long = {
     writeSorted(df, path, sortCol, numFiles)
     writeManifest(spark, path, Seq(sortCol -> ""), manifestPath)
   }
@@ -248,11 +249,12 @@ object Layout {
   /** [[writeZOrdered]] plus the TWO-dimensional data-skipping manifest:
     * each file's bounding rectangle (xlo, xhi, ylo, yhi, n_rows) — the
     * z-layout makes those rectangles small, which is what gives a
-    * rectangle query its pruning power on BOTH axes at once.
+    * rectangle query its pruning power on BOTH axes at once. Returns the
+    * rows written.
     */
   def writeZOrderedWithManifest(spark: org.apache.spark.sql.SparkSession,
       df: DataFrame, path: String, xCol: String, yCol: String, bits: Int,
-      numFiles: Int, manifestPath: String): Unit = {
+      numFiles: Int, manifestPath: String): Long = {
     writeZOrdered(df, path, xCol, yCol, bits, numFiles)
     writeManifest(spark, path, Seq(xCol -> "x", yCol -> "y"), manifestPath)
   }

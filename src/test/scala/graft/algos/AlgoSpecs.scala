@@ -178,6 +178,34 @@ class AppendLoadSpec extends SparkSpec {
     out.as[(Int, String, String)].collect().sorted shouldBe Array(
       (1, "a", "20180422"), (2, "b", "20180422"), (3, "c", "20180423"))
   }
+
+  test("a source under a dot-directory lands every row; hidden files and " +
+      "_SUCCESS below source_dir are skipped") {
+    val landing = tmp("al_dot") + "/.staging/landing"
+    val target = tmp("al_dot_tgt") + "/t"
+    def put(rel: String, body: String): Unit = {
+      val f = java.nio.file.Paths.get(landing, rel)
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.writeString(f, body)
+    }
+    put("20180422_data.psv", "1|a\n2|b\n")
+    put("sub/20180423_data.psv", "3|c\n")
+    put(".20180424_data.psv", "8|x\n")
+    put(".tmp/20180425_data.psv", "9|y\n")
+    put("_SUCCESS", "")
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("v", StringType),
+      StructField("date_part", StringType)))
+    new AppendLoad(spark, fsOps, AppendLoadParams(
+      sourceDir = landing, targetDir = target, headerDir = tmp("al_dot_h"),
+      format = DataFormat.Dsv("|"), targetSchema = schema,
+      partitionRegexes = Seq(".*\\/(\\d{8})_data\\.psv"),
+      targetPartitions = Seq("date_part"))).run()
+    val out = spark.read.option("basePath", target).parquet(target)
+      .select($"id", $"v", $"date_part".cast("string"))
+    out.as[(Int, String, String)].collect().sorted shouldBe Array(
+      (1, "a", "20180422"), (2, "b", "20180422"), (3, "c", "20180423"))
+  }
 }
 
 class AppendLoadEdgeSpec extends SparkSpec {

@@ -280,6 +280,21 @@ class VersionedTableSpec extends SparkSpec {
     assert(e2.getMessage.contains("not range-indexed"))
   }
 
+  test("commit rows are exact on range, z-order and indexed-compact " +
+      "landings") {
+    val root = tmp("vt_rows")
+    val big = spark.range(0, 4000, 1, 4).selectExpr(
+      "id", "id % 64 AS y", "id * 2 AS val")
+    val n = big.count()
+    VersionedTable.writeIndexed(big, fs, root, ts = 100L,
+      indexCol = "id", numFiles = 8)
+    VersionedTable.writeZIndexed(big, fs, root, ts = 200L,
+      xCol = "id", yCol = "y", bits = 16, numFiles = 8)
+    VersionedTable.compact(spark, fs, root, ts = 300L, numFiles = 4,
+      indexCol = Some("id"))
+    assert(VersionedTable.commits(fs, root).map(_.rows) === Seq(n, n, n))
+  }
+
   test("writeZIndexed commits a 2-D manifest; readVersionPrunedRect " +
       "opens only admitted files; kind/axis mismatches fail by name") {
     val root = tmp("vt")
