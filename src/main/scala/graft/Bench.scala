@@ -1,20 +1,33 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      graft.core.Session.cpus.toString)
-    val spark = graft.core.Session.builder("graft-bench")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: absorb JVM/codegen/scan-index startup outside the timings
+
+  /** Absorb JVM/codegen/scan-index startup outside the timings. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
     graft.core.Tables(spark, sfDir, "lineitem").count()
     graft.core.Tables(spark, sfDir, "events").groupBy("event_type").count()
       .collect()
+  }
+
+  /** Every query's median as integer ms (-1 = crashed), positional in
+    * sorted query-name order — the order of `queries` in the full line
+    * and `bench_out.json`. ~1.4 KB at 327 queries: with the totals line
+    * after it, it fits the ~2 KB tail a driver capture keeps.
+    */
+  def msLine(results: Seq[(String, Double)]): String =
+    results.sortBy(_._1).map { case (_, v) =>
+      if (v < 0) -1L else math.round(v * 1000)
+    }.mkString("""{"metric":"query_ms","order":"sorted","ms":[""", ",", "]}")
+
+  /** The last stdout line: suite totals only, <200 bytes. */
+  def totalsLine(total: Double, n: Int, outPath: String,
+      sfDir: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"queries_file":"$outPath","sf":"$sfDir"}"""
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = graft.core.Session.local("graft-bench")
+    warmUp(spark, sfDir)
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
     def once(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
@@ -59,15 +72,17 @@ object Bench {
     // The per-query line above is ~15 KB at 327 queries; tail captures that
     // keep only the last ~2 KB have failed to parse it two rounds running
     // (PERF_r13: prev/now_bench_ok both false, per_query empty). Persist the
-    // full line to a file and ALSO print a <200-byte summary LAST, so any
-    // tail capture ends with one complete, parseable JSON line. Timing
-    // methodology is unchanged — this only adds output.
+    // full line to a file and ALSO print the per-query ms line and a
+    // <200-byte totals line LAST, so any tail capture ends with complete,
+    // parseable JSON lines. Timing methodology is unchanged — this only
+    // adds output.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"queries_file":"$outPath","sf":"$sfDir"}""")
+    println(msLine(results))
+    println(totalsLine(total, results.size, outPath, sfDir))
     spark.stop()
   }
 }

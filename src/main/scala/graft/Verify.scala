@@ -46,15 +46,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      graft.core.Session.cpus.toString)
-    val spark = graft.core.Session.builder("graft-verify")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // reference semantics are pre-ANSI (lenient casts, null on bad parse)
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // local iteration aid: SPARK_GRAFT_QUERIES=q108,q65 dumps only the
     // named queries; unset (the driver's invocation) dumps everything

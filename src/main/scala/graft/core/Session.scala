@@ -51,7 +51,14 @@ object Session {
     if (hive) b.enableHiveSupport() else b
   }
 
-  /** local[] session for tests and CLI runs. */
-  def local(appName: String = "graft"): SparkSession =
-    builder(appName).master(s"local[$cpus]").getOrCreate()
+  /** local[cpus] session for the CLI mains (Bench, Verify, Measure):
+    * pre-ANSI lenient casts (the reference semantics), WARN logging.
+    */
+  def local(appName: String = "graft"): SparkSession = {
+    val spark = builder(appName).master(s"local[$cpus]")
+      .config("spark.sql.ansi.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -20,15 +20,16 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale: the intermediate is |left| + |right| rows — ONE hash exchange on
   * the key and one sort, with NO join node at all. The previous
-  * formulation (kept as [[pairExpansion]] for the probe) joined on the key
+  * formulation (kept as [[pairExpansion]], the spec oracle) joined on the key
   * with the temporal predicate and ranked matches per left row, which
   * materializes |left| × matches-per-key candidate rows before the window
   * discards all but one — at a 100 TB key history that intermediate IS the
   * operator's cost, and it grows with history depth even when the answer
   * does not. The sort-fill cost is history-depth-linear and shuffles each
-  * row exactly once (AsOfProbe measures the gap). For a pathologically hot
-  * key (one key = one task), pre-split the key by coarse time bucket and
-  * seed each bucket with its predecessor's last right row.
+  * row exactly once (the round-10 depth probe measured the gap). For a
+  * pathologically hot key (one key = one task), pre-split the key by
+  * coarse time bucket and seed each bucket with its predecessor's last
+  * right row.
   */
 object AsOfJoin {
 
@@ -217,10 +218,10 @@ object AsOfJoin {
         .otherwise(coalesce(col("v_prev"), col("v_next"))))
   }
 
-  /** The round-9 formulation, retained as the probe baseline: equi-join on
+  /** The round-9 formulation, retained as the spec oracle: equi-join on
     * the key with the temporal predicate, then a row_number window keeps
     * the latest match per left row. Correct, but the intermediate is
-    * |left| × matches-per-key — AsOfProbe measures it against [[apply]].
+    * |left| × matches-per-key, which grows with history depth.
     */
   def pairExpansion(left: DataFrame, right: DataFrame, leftKey: Column,
       rightKey: Column, leftTime: Column, rightTime: Column,

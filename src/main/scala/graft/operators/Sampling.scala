@@ -248,17 +248,16 @@ object Sampling {
     * prefilter becomes a sort-merge join whose probe side shuffles by the
     * (skewed!) group key, the downstream rank window pins that exact
     * distribution so AQE's skew-split cannot apply, and the dominant
-    * group funnels through one sort task — CapProbe measured a 7.4M-row
-    * single task and 2.6× the naive wall time at 10M rows/50% skew.
-    * `broadcastThresholds = false` is the opt-out for caps over MILLIONS
-    * of distinct over-cap groups, where the broadcast itself would be the
-    * OOM; accept the skewed shuffle join there or raise the cap.
+    * group funnels through one sort task — measured: a 7.4M-row single
+    * task and 2.6× the naive wall time at 10M rows/50% skew. The frame
+    * is one row per over-cap group; caps over MILLIONS of distinct
+    * over-cap groups would make the broadcast itself the OOM.
     *
     * vs the naive rank on Spark 4: `WindowGroupLimit` map-side prunes a
     * `row_number ≤ cap` filter (cap ≤ windowGroupLimitThreshold, default
     * 1000), so the naive plan's reduce task reads ~(#map partitions ×
     * cap) for the dominant group, not the whole group — fine at bench
-    * scale (and why BenchOne shows the naive constant is smaller), but it
+    * scale (and why single-query timings show the naive constant is smaller), but it
     * GROWS WITH THE CLUSTER: at 100 TB / ~800k map partitions that is
     * ~800M rows in one task. The histogram bound here (≤10⁶ rows per
     * group, then cap+ties) is independent of map count — which is why
@@ -279,7 +278,7 @@ object Sampling {
     * non-negative, so every row of a bucket past the threshold has
     * cumulative-before ≥ budget) → exact running sum ONLY over
     * survivors. The same broadcast reasoning as [[capPerGroup]] applies
-    * (CapProbe-measured there: the hint is load-bearing under skew).
+    * (measured there: the hint is load-bearing under skew).
     *
     * Contract: `idCol` values are unique and non-null per row where
     * budgets bind — rows tied on (bucket, id) have an engine-dependent
@@ -287,8 +286,7 @@ object Sampling {
     * prefilter's monotonicity argument and are not supported.
     */
   def capPerGroupWeighted(df: DataFrame, idCol: String, groupCol: String,
-      weightCol: String, budgetPerGroup: Double,
-      broadcastThresholds: Boolean = true): DataFrame = {
+      weightCol: String, budgetPerGroup: Double): DataFrame = {
     require(budgetPerGroup > 0, s"budget must be positive: $budgetPerGroup")
     import org.apache.spark.sql.expressions.Window
     def fresh(base: String): String = {
@@ -309,7 +307,7 @@ object Sampling {
       .filter(col(cumN) >= budgetPerGroup)
       .groupBy(col(groupCol))
       .agg(min(bkt).as(bstarN))
-    val thr = if (broadcastThresholds) broadcast(thresholds) else thresholds
+    val thr = broadcast(thresholds)
     val pre = bucketed
       .join(thr, Seq(groupCol), "left")
       .filter(col(bstarN).isNull || bkt <= col(bstarN))
@@ -354,14 +352,13 @@ object Sampling {
     * the weight of all strictly-better buckets joined in as an offset):
     * a nucleus keeps a FRACTION of each group, so windowing the whole
     * kept set would still funnel p×|dominant group| through one sort
-    * task (CapProbe's nucleus mode measured 2.0M window rows at 10M×50%
+    * task (measured: 2.0M window rows at 10M×50%
     * skew before this split; boundary-only brings it to the tie count
     * at one rounded score).
     */
   def nucleusPerGroup(df: DataFrame, idCol: String, groupCol: String,
       weightCol: String, scoreCol: String, p: Double,
-      scorePrecision: Int = 6,
-      broadcastThresholds: Boolean = true): DataFrame = {
+      scorePrecision: Int = 6): DataFrame = {
     require(p > 0 && p <= 1, s"p must be in (0, 1]: $p")
     import org.apache.spark.sql.expressions.Window
     def fresh(base: String): String = {
@@ -393,7 +390,7 @@ object Sampling {
       .agg(min(struct(bkt, (col(cumN) - col(wN)).as(offN))).as("__t"))
       .select(col(s"`$groupCol`"), col(s"__t.$bktN").as(bstarN),
         col(s"__t.$offN").as(offN))
-    val thr = if (broadcastThresholds) broadcast(thresholds) else thresholds
+    val thr = broadcast(thresholds)
     val joined = bucketed.join(thr, Seq(groupCol), "left")
     val orig = df.columns.map(c => col(s"`$c`")).toIndexedSeq
     // strictly-better buckets (and whole under-budget groups): kept
@@ -418,8 +415,7 @@ object Sampling {
 
   def capPerGroupWeightedBudgets(df: DataFrame, idCol: String,
       groupCol: String, weightCol: String, budgets: DataFrame,
-      budgetCol: String = "budget",
-      broadcastThresholds: Boolean = true): DataFrame = {
+      budgetCol: String = "budget"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def fresh(base: String): String = {
       var n = base
@@ -444,7 +440,7 @@ object Sampling {
       .filter(col(cumN) >= col(budN))
       .groupBy(col(groupCol))
       .agg(min(bkt).as(bstarN))
-    val thr = if (broadcastThresholds) broadcast(thresholds) else thresholds
+    val thr = broadcast(thresholds)
     val pre = bucketed
       .join(thr, Seq(groupCol), "left")
       .filter(col(bstarN).isNull || bkt <= col(bstarN))
@@ -486,7 +482,7 @@ object Sampling {
   }
 
   def capPerGroup(df: DataFrame, idCol: String, groupCol: String,
-      maxPerGroup: Int, broadcastThresholds: Boolean = true): DataFrame = {
+      maxPerGroup: Int): DataFrame = {
     require(maxPerGroup > 0, s"maxPerGroup must be positive: $maxPerGroup")
     import org.apache.spark.sql.expressions.Window
     // working columns must not clobber same-named user columns (withColumn
@@ -508,7 +504,7 @@ object Sampling {
       .filter(col(cumN) >= maxPerGroup) // reachable only when n ≥ cap
       .groupBy(col(groupCol))
       .agg(min(bkt).as(bstarN))
-    val thr = if (broadcastThresholds) broadcast(thresholds) else thresholds
+    val thr = broadcast(thresholds)
     val pre = bucketed
       .join(thr, Seq(groupCol), "left")
       .filter(col(bstarN).isNull || bkt <= col(bstarN))

@@ -16,4 +16,10 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** Wait until every listener event posted so far has been delivered
+    * (the bus is asynchronous and `private[spark]`), so a listener reads
+    * complete job records. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -45,6 +45,18 @@ class AsOfJoinSpec extends SparkSpec {
       .select($"p_id", $"r_id").as[(Long, Option[Long])]
       .collect().sortBy(_._1)
     base shouldBe fill
+    // and on random per-key histories, ties in right ts included
+    def side(n: Int, salt: Int, idc: String, kc: String, tc: String) =
+      spark.range(n).select(($"id" + salt * 1000000).as(idc),
+        pmod(hash($"id" + salt), lit(7)).cast("long").as(kc),
+        pmod(hash($"id" * 31 + salt), lit(500)).cast("long").as(tc))
+    val rl = side(300, 1, "p_id", "k", "p_ts")
+    val rr = side(900, 2, "r_id", "rk", "r_ts")
+    assertSameRows(
+      AsOfJoin(rl, rr, col("k"), col("rk"), col("p_ts"), col("r_ts"),
+        col("r_id")).select($"p_id", $"r_id"),
+      AsOfJoin.pairExpansion(rl, rr, col("k"), col("rk"), col("p_ts"),
+        col("r_ts"), col("p_id"), col("r_id")).select($"p_id", $"r_id"))
     // inner keeps only matched left rows
     AsOfJoin(left, right, col("k"), col("rk"), col("p_ts"), col("r_ts"),
         col("r_id"), joinType = "inner")

@@ -457,6 +457,24 @@ class SimilaritySpec extends SparkSpec {
     out((0, 1)) shouldBe ((3L, 5.333333))
     out((1, 1)) shouldBe ((3L, 10.666667))
     out.size shouldBe 3 // upper triangle only
+    // random vectors at the default scale equal the population formula
+    // over the same quantized integer moments, cell for cell
+    val rnd = new scala.util.Random(7)
+    val vs = Seq.fill(200)(Array.fill(5)(rnd.nextFloat() - 0.5f))
+    val q = vs.map(_.map(x => math.floor(x.toDouble * 1024).toLong))
+    val n = q.size.toDouble
+    val exp = (for (i <- 0 until 5; j <- i until 5) yield {
+      val (si, sj) = (q.map(_(i)).sum.toDouble, q.map(_(j)).sum.toDouble)
+      val sp = q.map(r => r(i) * r(j)).sum.toDouble
+      (i, j) -> java.math.BigDecimal.valueOf(
+          (n * sp - si * sj) / (n * n * (1024.0 * 1024)))
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    }).toMap
+    Similarity.embeddingCovariance(
+        vs.zipWithIndex.map { case (v, k) => (k.toLong, v) }
+          .toDF("vec_id", "embedding"), "embedding")
+      .as[(Int, Int, Long, Double)].collect()
+      .map(r => (r._1, r._2) -> r._4).toMap shouldBe exp
     // one corpus pass through the moments aggregate, then the dims²
     // cells are a bounded local relation: no join, no explode, no
     // per-row pair fan-out anywhere in the report plan
@@ -671,6 +689,8 @@ class TextAnalysisSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
     out.keySet shouldBe Set(1L, 2L, 3L) // doc 4 has no bigrams
+    TextAnalysis.bigramLogProbScore(docs, "doc_id", "text", 500, 500, 0.5)
+      .count() shouldBe 3L // at most one row per doc
     out(1L)._1 shouldBe 12L             // 13 tokens -> 12 bigrams
     // natural order hits frequent bigrams; the shuffled twin of doc 1
     // shares its unigram distribution but not its transitions
@@ -759,6 +779,8 @@ class TextAnalysisSpec extends SparkSpec {
       .toMap
     rep shouldBe Map("bad" -> ((2L, 3L)), "worse" -> ((1L, 1L)),
       "ghost" -> ((0L, 0L)))
+    TextAnalysis.blocklistReport(docs, "doc_id", "text",
+      Seq("bad", "worse", "ghost")).count() shouldBe 3L // one row per term
     TextAnalysis.blocklistFilter(docs, "text", Seq("bad", "worse"))
       .select($"doc_id").as[Long].collect().toSet shouldBe Set(2L)
     // the filter is a narrow predicate: no exchange in its plan
@@ -1804,9 +1826,11 @@ class LayoutSpec extends SparkSpec {
     // x-sorted files all span the full y domain -> no skipping; z-sorted
     // files cover (x, y) rectangles -> most files never materialize
     zRows.toDouble should be < xRows.toDouble / 2
-    // and the data round-trips identically
-    spark.read.parquet(s"$dir/z").filter($"y" < 16).count() shouldBe
-      df.filter($"y" < 16).count()
+    // and both layouts return the plain filter's rows
+    Seq("z", "xsort").foreach { l =>
+      assertSameRows(spark.read.parquet(s"$dir/$l").filter($"y" < 16),
+        df.filter($"y" < 16))
+    }
   }
 
   test("manifest-pruned range read: only overlapping files are opened, " +
@@ -2244,6 +2268,7 @@ class StatsSpec extends SparkSpec {
     // independent: uniform 2x2 cross product, each cell once
     val ind = Seq(("x", "u"), ("x", "v"), ("y", "u"), ("y", "v"))
       .toDF("a", "b")
+    Stats.mutualInformation(ind, "a", "b").count() shouldBe 1L
     val (n1, ka1, kb1, ha1, hb1, hab1, mi1, nmi1) =
       Stats.mutualInformation(ind, "a", "b")
         .as[(Long, Long, Long, Double, Double, Double, Double,

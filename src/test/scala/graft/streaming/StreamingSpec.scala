@@ -233,6 +233,8 @@ class EventStreamSpec extends SparkSpec {
     val singleShot = Decontaminate.decontaminate(corpus, "doc_id", "text",
       bench, "qt", n = 4, minOverlap = 1)
     assertSameRows(out, singleShot)
+    assertSameRows(out, Decontaminate.decontaminate(corpus, "doc_id", "text",
+      bench, "qt", n = 4, minOverlap = 1, bloom = true))
     out.select($"doc_id").as[Long].collect().sorted shouldBe
       Array(2L, 4L, 5L)
   }
@@ -569,10 +571,9 @@ class SamplingSpec extends SparkSpec {
       .filter($"__r" <= 50).drop("__r")
     assertSameRows(capped, naive)
     // plan asserted AFTER execution: the threshold join DOES carry a
-    // forced broadcast hint by default — CapProbe measured it load-bearing
-    // under skew (without it, the rank window pins a skewed SMJ that AQE
-    // can't split: one task read 7.37M rows, 2.6x naive wall). Million-
-    // group caps opt out with broadcastThresholds=false.
+    // forced broadcast hint — measured load-bearing under skew (without
+    // it, the rank window pins a skewed SMJ that AQE can't split: one
+    // task read 7.37M rows, 2.6x naive wall).
     val plan = capped.queryExecution.executedPlan.toString
     plan should include("BroadcastHashJoin")
     plan should include("__bstar")
