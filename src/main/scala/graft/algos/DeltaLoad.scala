@@ -89,12 +89,8 @@ class DeltaLoad(val spark: SparkSession, fsOps: FsOps, p: DeltaLoadParams)
     val activeScoped =
       if (p.targetPartitions.isEmpty) active
       else {
-        val parts = deltaP.select(p.targetPartitions.map(col): _*)
-          .distinct().collect()
-          .map(r => p.targetPartitions.zipWithIndex.map {
-            case (c, i) => (c, r.get(i)) }.toSeq).toSeq
-        affectedPartitionDirs = parts.map(_.map { case (c, v) =>
-          PartitionCriteria.partitionDirName(c, v) }.mkString("/"))
+        val parts = PartitionCriteria.present(deltaP, p.targetPartitions)
+        affectedPartitionDirs = PartitionCriteria.dirNames(parts)
         active.filter(PartitionCriteria.toColumn(parts))
       }
 

@@ -1,7 +1,7 @@
 package graft.algos
 
 import graft.core.Algorithm
-import graft.expr.{DateComponents, SchemaOps}
+import graft.expr.{DateComponents, PartitionCriteria, SchemaOps}
 import graft.fsops.FsOps
 import graft.io.{AtomicWriter, DataFormat, LoadMode}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -80,17 +80,12 @@ class DeltaMergeLoad(val spark: SparkSession, fsOps: FsOps,
       val scoped =
         if (p.targetPartitions.isEmpty) target
         else {
-          val parts = delta.select(p.targetPartitions.map(col): _*)
-            .distinct().collect()
-            .map(r => p.targetPartitions.zipWithIndex.map {
-              case (c, i) => (c, r.get(i)) }.toSeq).toSeq
-          affectedPartitionDirs = parts.map(_.map { case (c, v) => s"$c=$v" }
-            .mkString("/"))
+          val parts = PartitionCriteria.present(delta, p.targetPartitions)
+          affectedPartitionDirs = PartitionCriteria.dirNames(parts)
           val sentinel = p.targetPartitions.map(c =>
             (c, if (c == "year") DateComponents.SentinelYear
                 else DateComponents.SentinelPart): (String, Any))
-          target.filter(
-            graft.expr.PartitionCriteria.toColumn(parts :+ sentinel))
+          target.filter(PartitionCriteria.toColumn(parts :+ sentinel))
         }
       // schema auto-merge: target rows gain null for new delta columns
       val evolved = SchemaOps.addMissingColumns(scoped,

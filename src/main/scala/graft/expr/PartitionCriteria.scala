@@ -1,6 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Partition-selection predicates: an OR of ANDs over (column, value) pairs.
@@ -48,6 +48,22 @@ object PartitionCriteria {
     }
     s"$column=$v"
   }
+
+  /** The distinct `partitionCols` tuples present in `df`, as criteria
+    * (one conjunction per tuple) — a distinct over the partition columns
+    * only (map-side combine; tiny shuffle).
+    */
+  def present(df: DataFrame, partitionCols: Seq[String]): Criteria =
+    df.select(partitionCols.map(col): _*).distinct().collect().toSeq
+      .map(r => partitionCols.zipWithIndex.map { case (c, i) =>
+        (c, r.get(i)) })
+
+  /** Hive dir names (`a=1/b=x`) of each conjunction in `criteria`, via
+    * [[partitionDirName]].
+    */
+  def dirNames(criteria: Criteria): Seq[String] =
+    criteria.map(_.map { case (c, v) => partitionDirName(c, v) }
+      .mkString("/"))
 
   /** Single conjunction (the FixedSizeStringExtractor / Materialization
     * single-partition case).

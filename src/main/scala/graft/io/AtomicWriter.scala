@@ -1,8 +1,8 @@
 package graft.io
 
-import graft.expr.SchemaOps
+import graft.expr.{PartitionCriteria, SchemaOps}
 import graft.fsops.FsOps
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 
 /** Transactional partitioned writes: write to a temp dir, back up the
@@ -163,14 +163,7 @@ class AtomicWriter(fsOps: FsOps, targetPartitions: Seq[String] = Seq.empty,
     }
   }
 
-  /** OR-of-ANDs filter selecting the partitions present in df — computed as
-    * a distinct over partition columns only (map-side combine; tiny shuffle).
-    */
-  private def affectedFilter(df: DataFrame): org.apache.spark.sql.Column = {
-    import graft.expr.PartitionCriteria
-    val parts = df.select(targetPartitions.map(col): _*).distinct().collect()
-      .map(r => targetPartitions.zipWithIndex.map { case (c, i) => (c, r.get(i)) })
-      .toSeq
-    PartitionCriteria.toColumn(parts)
-  }
+  /** OR-of-ANDs filter selecting the partitions present in df. */
+  private def affectedFilter(df: DataFrame): Column =
+    PartitionCriteria.toColumn(PartitionCriteria.present(df, targetPartitions))
 }

@@ -1,14 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming ingest path for the events table — a pure extension
   * (SURVEY §2.12: the reference has no streaming). Tumbling-window
   * aggregation with watermarking; the same transform applies to a batch
   * frame, which is how correctness is oracled (stream/batch unification).
+  *
+  * Every `run*Once` runner is a thin caller of one of two drains: the
+  * memory drain ([[drainToMemory]]) for runners that return the settled
+  * stream itself, and the per-batch drain ([[drainBatches]]) for runners
+  * that act on each micro-batch. Both run AvailableNow, process
+  * everything available and always stop the query; runner names are
+  * uniquified per call so repeated runs (bench reps) never collide on an
+  * active query name.
   */
 object EventStream {
 
@@ -31,23 +39,11 @@ object EventStream {
   def runWindowedOnce(spark: SparkSession, schema: StructType,
       inputGlob: String, windowDur: String, horizon: String,
       queryName: String,
-      prepare: DataFrame => DataFrame = identity): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    withAdaptiveStatePartitions(spark, Seq(inputGlob)) {
-      val stream = prepare(spark.readStream.schema(schema).parquet(inputGlob))
-        .withWatermark("ts", horizon)
-      val q: StreamingQuery = windowedCounts(stream, windowDur)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sink)
+      prepare: DataFrame => DataFrame = identity): DataFrame =
+    drainToMemory(spark, queryName, stateInputs = Seq(inputGlob)) { s =>
+      windowedCounts(prepare(files(s, schema, inputGlob))
+        .withWatermark("ts", horizon), windowDur)
     }
-  }
 
   /** Trending per window: top-k terms of each time window by count
     * (term tie-break) over a settled [[windowedCounts]] frame — the
@@ -79,6 +75,17 @@ object EventStream {
 
   private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** A parquet file stream over `path`; `maxFilesPerTrigger` bounds each
+    * micro-batch (None = all available files in one batch).
+    */
+  private[streaming] def files(spark: SparkSession, schema: StructType,
+      path: String, maxFilesPerTrigger: Option[Int] = None,
+      options: Map[String, String] = Map.empty): DataFrame =
+    spark.readStream.schema(schema).options(options)
+      .options(maxFilesPerTrigger.map("maxFilesPerTrigger" -> _.toString)
+        .toMap)
+      .parquet(path)
+
   /** Scale-honest state/shuffle partitioning for a STATEFUL streaming
     * query over file sources (guide §2.2 — fewer, larger partitions; §2.5
     * in reverse). A stateful operator's partition count is frozen from
@@ -92,68 +99,84 @@ object EventStream {
     * input, floored at 4, capped at the session's configured shuffle
     * partitions — input-size-derived, not a core-count constant, so a
     * real cluster's real stream hits the cap and is untouched, while a
-    * small stream gets state partitions proportional to its data. The
-    * session conf is restored after the query drains (the sinks these
-    * runners return never depend on it).
+    * small stream gets state partitions proportional to its data.
+    * Returns a count only when it is below the configured one.
     */
-  private def withAdaptiveStatePartitions[T](spark: SparkSession,
-      inputPaths: Seq[String])(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val configured =
-      try spark.conf.get(key).toInt
-      catch { case scala.util.control.NonFatal(_) => return body }
-    if (configured <= 4) return body
-    val bytes =
-      try {
-        val hconf = spark.sparkContext.hadoopConfiguration
-        inputPaths.map { g =>
-          val p = new org.apache.hadoop.fs.Path(g)
-          val fs = p.getFileSystem(hconf)
-          Option(fs.globStatus(p)).getOrElse(Array.empty).map { st =>
-            if (st.isDirectory) fs.getContentSummary(st.getPath).getLength
-            else st.getLen
-          }.sum
-        }.sum
-      } catch { case scala.util.control.NonFatal(_) => return body }
-    val perPartition = 8L * 1024 * 1024
-    val target = math.min(configured.toLong,
-      math.max(4L, (bytes + perPartition - 1) / perPartition)).toInt
-    if (target >= configured) body
+  private def statePartitions(spark: SparkSession,
+      inputPaths: Seq[String]): Option[Int] = scala.util.Try {
+    val configured = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    if (inputPaths.isEmpty || configured <= 4) None
     else {
-      spark.conf.set(key, target.toString)
-      try body finally spark.conf.set(key, configured.toString)
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val bytes = inputPaths.map { g =>
+        val p = new org.apache.hadoop.fs.Path(g)
+        val fs = p.getFileSystem(hconf)
+        Option(fs.globStatus(p)).getOrElse(Array.empty).map { st =>
+          if (st.isDirectory) fs.getContentSummary(st.getPath).getLength
+          else st.getLen
+        }.sum
+      }.sum
+      val perPartition = 8L * 1024 * 1024
+      val target = math.max(4L, (bytes + perPartition - 1) / perPartition)
+      Option.when(target < configured)(target.toInt)
     }
+  }.toOption.flatten
+
+  /** The memory drain: start `build`'s stream into a memory sink under a
+    * uniquified name, drain it with AvailableNow, always stop it, and
+    * return the settled sink as a frame of `spark`. A stateful runner
+    * passes its input paths as `stateInputs`; when they call for fewer
+    * state partitions than `spark` is configured with
+    * ([[statePartitions]]), `build` gets a clone of `spark` carrying that
+    * count: the caller's conf is never changed, and the sink's temp view
+    * is registered in the clone, not in the caller's catalog.
+    */
+  private def drainToMemory(spark: SparkSession, queryName: String,
+      stateInputs: Seq[String] = Nil, outputMode: String = "append")
+      (build: SparkSession => DataFrame): DataFrame = {
+    val session = statePartitions(spark, stateInputs).fold(spark)(n =>
+      GraftBridge.cloneSession(spark,
+        "spark.sql.shuffle.partitions" -> n.toString))
+    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
+    val q = build(session).writeStream.outputMode(outputMode)
+      .format("memory").queryName(sink)
+      .trigger(Trigger.AvailableNow()).start()
+    try q.processAllAvailable() finally q.stop()
+    GraftBridge.rebind(spark, session.table(sink))
+  }
+
+  /** The per-batch drain: run `each(batch, batchId)` on every micro-batch
+    * of `stream` (AvailableNow, always stopped). `checkpointLocation`
+    * carries the engine's batch counter and processed-file log across
+    * runs (None = a fresh temporary checkpoint per run).
+    */
+  private[streaming] def drainBatches(stream: DataFrame, queryName: String,
+      checkpointLocation: Option[String] = None)
+      (each: (DataFrame, Long) => Unit): Unit = {
+    val w = stream.writeStream
+      .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
+      .foreachBatch(each)
+      .trigger(Trigger.AvailableNow())
+    val q = checkpointLocation
+      .fold(w)(cp => w.option("checkpointLocation", cp)).start()
+    try q.processAllAvailable() finally q.stop()
   }
 
   /** Run [[dedupStream]] as a real streaming query over parquet input,
     * draining to a memory sink; returns the settled result. `prepare` maps
     * the raw streaming frame before the watermark (e.g. a nanos-long →
     * timestamp conversion that the batch loader does in
-    * [[graft.core.Tables]]). The sink name is uniquified per call so
-    * repeated runs (bench reps) never collide on an active query name.
+    * [[graft.core.Tables]]).
     */
   def runDedupOnce(spark: SparkSession, schema: StructType, inputDir: String,
       keyCols: Seq[String], watermarkCol: String, horizon: String,
       queryName: String,
       prepare: DataFrame => DataFrame = identity,
-      readerOptions: Map[String, String] = Map.empty): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    withAdaptiveStatePartitions(spark, Seq(inputDir)) {
-      val stream = prepare(spark.readStream.schema(schema)
-        .options(readerOptions).parquet(inputDir))
-      val q: StreamingQuery =
-        dedupStream(stream, keyCols, watermarkCol, horizon)
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(sink)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sink)
+      readerOptions: Map[String, String] = Map.empty): DataFrame =
+    drainToMemory(spark, queryName, stateInputs = Seq(inputDir)) { s =>
+      val stream = files(s, schema, inputDir, options = readerOptions)
+      dedupStream(prepare(stream), keyCols, watermarkCol, horizon)
     }
-  }
 
   /** Run [[graft.operators.Dedup.dedupStreamAgainst]] as a real streaming
     * query (AvailableNow over parquet, memory sink): arriving rows whose
@@ -161,34 +184,18 @@ object EventStream {
     * micro-batch. The static side is PINNED for the query's lifetime
     * ([[graft.operators.Dedup.pinDigests]]) and released after it stops —
     * stream-static joins otherwise re-evaluate the static plan per
-    * micro-batch, re-scanning the landed artifacts every trigger.
-    * `maxFilesPerTrigger` bounds each micro-batch (None = all available
-    * files in one batch). Sink name uniquified like [[runDedupOnce]].
+    * micro-batch, re-scanning the landed artifacts every trigger. The
+    * memory sink holds the settled rows; it does not depend on the
+    * released cache.
     */
   def runStreamAgainstOnce(spark: SparkSession, schema: StructType,
       inputGlob: String, artifacts: DataFrame, textCol: String,
       queryName: String, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(inputGlob)
     val pinned = graft.operators.Dedup.pinDigests(artifacts)
-    try {
-      val q: StreamingQuery = graft.operators.Dedup
-        .dedupStreamAgainst(stream, pinned, textCol)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    try drainToMemory(spark, queryName) { s =>
+      graft.operators.Dedup.dedupStreamAgainst(
+        files(s, schema, inputGlob, maxFilesPerTrigger), pinned, textCol)
     } finally pinned.release()
-    // the memory sink holds the settled rows; it does not depend on the
-    // released cache
-    spark.table(sink)
   }
 
   /** The NEAR-DUP streaming increment — the streaming face of
@@ -216,27 +223,13 @@ object EventStream {
       idCol: String, textCol: String, threshold: Double, outDir: String,
       queryName: String, maxFilesPerTrigger: Option[Int] = None,
       shingleSize: Int = 3, k: Int = 32, bands: Int = 8): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(inputGlob)
     val prepared = graft.operators.Dedup.prepareIncrement(artifacts,
       shingleSize, k, bands)
-    try {
-      val q: StreamingQuery = stream.writeStream
-        .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Dedup.dedupIncrementPrepared(existing, batch,
-              idCol, textCol, prepared, threshold)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    try runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Dedup.dedupIncrementPrepared(existing, batch,
+        idCol, textCol, prepared, threshold)
     } finally prepared.release()
-    spark.read.parquet(outDir)
   }
 
   /** Native session-window streaming aggregation (`session_window`):
@@ -251,28 +244,13 @@ object EventStream {
   def runSessionWindowOnce(spark: SparkSession, schema: StructType,
       inputGlob: String, keyCol: String, gap: String, queryName: String,
       prepare: DataFrame => DataFrame = identity,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    withAdaptiveStatePartitions(spark, Seq(inputGlob)) {
-      val rd = spark.readStream.schema(schema)
-      val stream = prepare(maxFilesPerTrigger
-        .fold(rd)(n => rd.option("maxFilesPerTrigger", n))
-        .parquet(inputGlob))
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    drainToMemory(spark, queryName, stateInputs = Seq(inputGlob)) { s =>
+      prepare(files(s, schema, inputGlob, maxFilesPerTrigger))
         .withWatermark("ts", "0 seconds")
-      val q: StreamingQuery = stream
         .groupBy(col(keyCol), session_window(col("ts"), gap))
         .agg(count(lit(1)).as("n_events"), max(col("ts")).as("last_ts"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sink)
     }
-  }
 
   /** Sliding-window streaming counts (`window(ts, dur, slide)`): each
     * event lands in dur/slide overlapping windows. Same zero-lateness
@@ -283,26 +261,14 @@ object EventStream {
   def runSlidingWindowOnce(spark: SparkSession, schema: StructType,
       inputGlob: String, windowDur: String, slide: String,
       queryName: String,
-      prepare: DataFrame => DataFrame = identity): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    withAdaptiveStatePartitions(spark, Seq(inputGlob)) {
-      val stream = prepare(spark.readStream.schema(schema).parquet(inputGlob))
+      prepare: DataFrame => DataFrame = identity): DataFrame =
+    drainToMemory(spark, queryName, stateInputs = Seq(inputGlob)) { s =>
+      prepare(files(s, schema, inputGlob))
         .withWatermark("ts", "0 seconds")
-      val q: StreamingQuery = stream
         .groupBy(window(col("ts"), windowDur, slide), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("sum_value"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sink)
     }
-  }
 
   /** Streaming as-of enrichment — the streaming face of
     * [[graft.operators.AsOfJoin]]: probe rows arriving on the stream are
@@ -320,28 +286,13 @@ object EventStream {
       rightKey: String, leftTime: String, rightTime: String,
       tieBreak: String, outDir: String, queryName: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(inputGlob)
     val pinned = history.persist()
     pinned.count() // materialize before the first trigger
-    try {
-      val q: StreamingQuery = stream.writeStream
-        .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.AsOfJoin(batch, pinned, col(leftKey),
-              col(rightKey), col(leftTime), col(rightTime), col(tieBreak))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    try runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.AsOfJoin(batch, pinned, col(leftKey), col(rightKey),
+        col(leftTime), col(rightTime), col(tieBreak))
     } finally pinned.unpersist()
-    spark.read.parquet(outDir)
   }
 
   /** Streaming PQ encode — the streaming face of
@@ -363,27 +314,13 @@ object EventStream {
       inputGlob: String, codebooks: DataFrame, idCol: String,
       vecCol: String, dim: Int, m: Int, outDir: String, queryName: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(inputGlob)
     val pinned = codebooks.persist()
     pinned.count() // materialize before the first trigger
-    try {
-      val q: StreamingQuery = stream.writeStream
-        .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Similarity
-            .pqEncode(batch, idCol, vecCol, dim, m, pinned)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    try runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Similarity.pqEncode(batch, idCol, vecCol, dim, m,
+        pinned)
     } finally pinned.unpersist()
-    spark.read.parquet(outDir)
   }
 
   /** Streaming benchmark decontamination — the streaming face of
@@ -406,27 +343,13 @@ object EventStream {
       idCol: String, textCol: String, outDir: String, queryName: String,
       n: Int = 8, minOverlap: Int = 1,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-      .parquet(inputGlob)
     val pb = graft.operators.Decontaminate.prepareBenchmark(bench,
       benchTextCol, n)
-    try {
-      val q: StreamingQuery = stream.writeStream
-        .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Decontaminate
-            .decontaminatePrepared(batch, idCol, textCol, pb, minOverlap)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    try runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Decontaminate.decontaminatePrepared(batch, idCol,
+        textCol, pb, minOverlap)
     } finally pb.release()
-    spark.read.parquet(outDir)
   }
 
   /** Streaming classification — the streaming face of
@@ -444,24 +367,12 @@ object EventStream {
       inputGlob: String, model: DataFrame, idCol: String, textCol: String,
       outDir: String, queryName: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-      .parquet(inputGlob)
     val prepared = graft.operators.Classify.prepareModel(model)
-    val q: StreamingQuery = stream.writeStream
-      .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Classify
-          .scoreWithModel(batch, prepared, idCol, textCol)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.read.parquet(outDir)
+    runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Classify.scoreWithModel(batch, prepared, idCol,
+        textCol)
+    }
   }
 
   /** Streaming SEMANTIC decontamination — the streaming face of
@@ -481,27 +392,13 @@ object EventStream {
       threshold: Double, outDir: String, queryName: String,
       bits: Int = 8, tables: Int = 4,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-      .parquet(inputGlob)
     val ps = graft.operators.Decontaminate.prepareSemantic(bench,
       benchIdCol, benchVecCol, bits, tables)
-    try {
-      val q: StreamingQuery = stream.writeStream
-        .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Decontaminate
-            .overlapsSemanticPrepared(batch, idCol, vecCol, ps, threshold)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    try runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Decontaminate.overlapsSemanticPrepared(batch, idCol,
+        vecCol, ps, threshold)
     } finally ps.release()
-    spark.read.parquet(outDir)
   }
 
   /** Streaming BM25 scoring — the streaming face of
@@ -525,26 +422,11 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val arts = artifacts.persist()
     val qs = queries.persist()
-    try {
-      val reader = spark.readStream.schema(schema)
-      val stream = maxFilesPerTrigger
-        .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-        .parquet(inputGlob)
-      val q: StreamingQuery = stream.writeStream
-        .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Similarity.bm25ScoreAgainst(batch, idCol,
-              textCol, qs, queryIdCol, queryTextCol, arts,
-              maxDfFraction = maxDfFraction)
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
+    try runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Similarity.bm25ScoreAgainst(batch, idCol, textCol,
+        qs, queryIdCol, queryTextCol, arts, maxDfFraction = maxDfFraction)
     } finally { arts.unpersist(); qs.unpersist() }
-    spark.read.parquet(outDir)
   }
 
   /** Streaming DSIR scoring — the streaming face of
@@ -561,25 +443,12 @@ object EventStream {
   def runDsirScoreOnce(spark: SparkSession, schema: StructType,
       inputGlob: String, diff: DataFrame, idCol: String, textCol: String,
       buckets: Int, outDir: String, queryName: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-      .parquet(inputGlob)
-    val q: StreamingQuery = stream.writeStream
-      .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dsir
-          .scoreWithDiff(batch, diff, idCol, textCol, buckets)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.read.parquet(outDir)
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+        maxFilesPerTrigger) { batch =>
+      graft.operators.Dsir.scoreWithDiff(batch, diff, idCol, textCol,
+        buckets)
+    }
 
   /** Streaming quality monitoring — the q112 rule set evaluated per
     * micro-batch via `foreachBatch`, each trigger appending its
@@ -600,22 +469,12 @@ object EventStream {
     val checks = rules.map(graft.operators.Checks.parseRule)
     require(checks.forall(_.violates.isDefined),
       s"streaming checks must be row-level (batch-decomposable): $rules")
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-      .parquet(inputGlob)
-    val q: StreamingQuery = stream.writeStream
-      .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Checks.run(batch, checks)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainBatches(files(spark, schema, inputGlob, maxFilesPerTrigger),
+        queryName) { (batch, batchId) =>
+      graft.operators.Checks.run(batch, checks)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outDir)
+    }
     spark.read.parquet(outDir)
   }
 
@@ -649,29 +508,13 @@ object EventStream {
   def runIntervalJoinOnce(spark: SparkSession, leftSchema: StructType,
       leftDir: String, rightSchema: StructType, rightDir: String,
       leftKey: String, rightKey: String, leftTs: String, rightTs: String,
-      lookback: String, horizon: String, queryName: String): DataFrame = {
-    withAdaptiveStatePartitions(spark, Seq(leftDir, rightDir)) {
-      val l = spark.readStream.schema(leftSchema).parquet(leftDir)
-      val r = spark.readStream.schema(rightSchema).parquet(rightDir)
-      val q: StreamingQuery =
-        intervalJoin(l, r, leftKey, rightKey, leftTs, rightTs, lookback,
-          horizon)
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
+      lookback: String, horizon: String, queryName: String): DataFrame =
+    drainToMemory(spark, queryName, Seq(leftDir, rightDir)) { s =>
+      intervalJoin(files(s, leftSchema, leftDir),
+        files(s, rightSchema, rightDir), leftKey, rightKey, leftTs, rightTs,
+        lookback, horizon)
     }
-  }
 
-  /** Run the windowed agg as a real streaming query over parquet input,
-    * draining to a memory sink; returns the settled result. Used by tests
-    * to prove the streaming path works end to end.
-    */
   /** One-shot streaming heavy hitters: Misra-Gries as a complete-mode
     * streaming aggregate — the sketch's k-counter state lives in the
     * state store and MERGES across micro-batches (the associativity the
@@ -682,29 +525,15 @@ object EventStream {
   def runHeavyHittersOnce(spark: SparkSession, schema: StructType,
       inputDir: String, itemCol: String, k: Int, queryName: String,
       prepare: DataFrame => DataFrame = identity,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    withAdaptiveStatePartitions(spark, Seq(inputDir)) {
-      val rd = spark.readStream.schema(schema)
-      val reader = maxFilesPerTrigger
-        .fold(rd)(n => rd.option("maxFilesPerTrigger", n))
-      val stream = prepare(reader.parquet(inputDir))
-      val agg = stream.filter(col(itemCol).isNotNull)
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    drainToMemory(spark, queryName, Seq(inputDir), "complete") { s =>
+      prepare(files(s, schema, inputDir, maxFilesPerTrigger))
+        .filter(col(itemCol).isNotNull)
         .agg(graft.functions.MisraGriesAgg
           .heavyHitters(col(itemCol), k).as("hh"))
-      val q: StreamingQuery = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-        .select(explode(col("hh")).as("__e"))
-        .select(col("__e.item").as("item"),
-          col("__e.count_low").as("count_low"))
-    }
-  }
+    }.select(explode(col("hh")).as("__e"))
+      .select(col("__e.item").as("item"),
+        col("__e.count_low").as("count_low"))
 
   /** ML scoring on a stream: stateless nearest-centroid assignment per
     * micro-batch. The trained centroid artifact rides in the plan as a
@@ -717,25 +546,12 @@ object EventStream {
   def runKMeansAssignOnce(spark: SparkSession, schema: StructType,
       inputDir: String, cent: DataFrame, idCol: String, vecCol: String,
       queryName: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    val rd = spark.readStream.schema(schema)
-    val reader = maxFilesPerTrigger
-      .fold(rd)(n => rd.option("maxFilesPerTrigger", n))
-    val assigned = reader.parquet(inputDir)
-      .select(col(idCol),
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    drainToMemory(spark, queryName) { s =>
+      files(s, schema, inputDir, maxFilesPerTrigger).select(col(idCol),
         graft.operators.Similarity.nearestCentroid(cent, col(vecCol))
           .as("cid"))
-    val q: StreamingQuery = assigned.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sink)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sink)
-  }
+    }
 
   /** Streaming per-group quantiles: the KLL-style sketch runs as a
     * complete-mode aggregate whose bounded (value, weight) state MERGES
@@ -745,28 +561,14 @@ object EventStream {
   def runQuantileSketchOnce(spark: SparkSession, schema: StructType,
       inputDir: String, groupCol: String, valueCol: String,
       ps: Seq[Double], k: Int, queryName: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    withAdaptiveStatePartitions(spark, Seq(inputDir)) {
-      val rd = spark.readStream.schema(schema)
-      val reader = maxFilesPerTrigger
-        .fold(rd)(n => rd.option("maxFilesPerTrigger", n))
-      val agg = reader.parquet(inputDir)
-        .groupBy(col(groupCol))
-        .agg(graft.functions.QuantileSketchAgg
-          .sketch(col(valueCol).cast("double"), k).as("__sk"))
-      val q: StreamingQuery = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      graft.operators.Stats.quantilesFromSketches(
-        spark.table(sink), groupCol, ps)
-    }
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    graft.operators.Stats.quantilesFromSketches(
+      drainToMemory(spark, queryName, Seq(inputDir), "complete") { s =>
+        files(s, schema, inputDir, maxFilesPerTrigger)
+          .groupBy(col(groupCol))
+          .agg(graft.functions.QuantileSketchAgg
+            .sketch(col(valueCol).cast("double"), k).as("__sk"))
+      }, groupCol, ps)
 
   /** Streaming k-means centroid update (mini-batch training state):
     * vectors are assigned to the FIXED centroid literal per micro-batch
@@ -779,34 +581,20 @@ object EventStream {
     * window's centroids.
     */
   def runKMeansUpdateOnce(spark: SparkSession, schema: StructType,
-      inputDir: String, cent: org.apache.spark.sql.DataFrame,
-      vecCol: String, queryName: String, scale: Long = 1024L,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    withAdaptiveStatePartitions(spark, Seq(inputDir)) {
-      val rd = spark.readStream.schema(schema)
-      val reader = maxFilesPerTrigger
-        .fold(rd)(n => rd.option("maxFilesPerTrigger", n))
-      val sums = reader.parquet(inputDir)
-        .select(graft.operators.Similarity
-            .nearestCentroid(cent, col(vecCol)).as("cid"),
-          transform(col(vecCol),
-            x => floor(x.cast("double") * scale).cast("long")).as("__q"))
-        .groupBy(col("cid"))
-        .agg(count(lit(1)).as("n"),
-          graft.functions.VectorSumAgg.vectorSum(col("__q")).as("__s"))
-      val q: StreamingQuery = sums.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      graft.operators.Similarity.finalizeCentroids(cent,
-        spark.table(sink), scale)
-    }
-  }
+      inputDir: String, cent: DataFrame, vecCol: String,
+      queryName: String, scale: Long = 1024L,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    graft.operators.Similarity.finalizeCentroids(cent,
+      drainToMemory(spark, queryName, Seq(inputDir), "complete") { s =>
+        files(s, schema, inputDir, maxFilesPerTrigger)
+          .select(graft.operators.Similarity
+              .nearestCentroid(cent, col(vecCol)).as("cid"),
+            transform(col(vecCol),
+              x => floor(x.cast("double") * scale).cast("long")).as("__q"))
+          .groupBy(col("cid"))
+          .agg(count(lit(1)).as("n"),
+            graft.functions.VectorSumAgg.vectorSum(col("__q")).as("__s"))
+      }, scale)
 
   /** Streaming distinct-count monitoring: per-group KMV sketches run as
     * a complete-mode aggregate whose bottom-k hash sets MERGE across
@@ -817,31 +605,15 @@ object EventStream {
   def runKmvDistinctOnce(spark: SparkSession, schema: StructType,
       inputDir: String, groupCol: String, idCol: String, k: Int,
       queryName: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    withAdaptiveStatePartitions(spark, Seq(inputDir)) {
-      val rd = spark.readStream.schema(schema)
-      val reader = maxFilesPerTrigger
-        .fold(rd)(n => rd.option("maxFilesPerTrigger", n))
-      val hash = conv(substring(md5(col(idCol).cast("string")), 1, 15),
-        16, 10).cast("long")
-      val agg = reader.parquet(inputDir)
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    drainToMemory(spark, queryName, Seq(inputDir), "complete") { s =>
+      files(s, schema, inputDir, maxFilesPerTrigger)
         .groupBy(col(groupCol))
-        .agg(graft.functions.KmvAgg.kmvSketch(hash, k).as("__sk"))
-      val q: StreamingQuery = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sink).select(col(groupCol),
-        graft.operators.DistinctSketch.kmvEstimateFromArray(col("__sk"), k)
-          .as("est_distinct"),
-        size(col("__sk")).cast("long").as("sketch_rows"))
-    }
-  }
+        .agg(graft.functions.KmvAgg.kmvSketch(idHash(idCol), k).as("__sk"))
+    }.select(col(groupCol),
+      graft.operators.DistinctSketch.kmvEstimateFromArray(col("__sk"), k)
+        .as("est_distinct"),
+      size(col("__sk")).cast("long").as("sketch_rows"))
 
   /** Streaming distinct-count monitoring, HLL face: per-group register
     * arrays merged across micro-batches ([[graft.functions.HllAgg]] —
@@ -853,29 +625,19 @@ object EventStream {
   def runHllDistinctOnce(spark: SparkSession, schema: StructType,
       inputDir: String, groupCol: String, idCol: String, p: Int,
       queryName: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    withAdaptiveStatePartitions(spark, Seq(inputDir)) {
-      val rd = spark.readStream.schema(schema)
-      val reader = maxFilesPerTrigger
-        .fold(rd)(n => rd.option("maxFilesPerTrigger", n))
-      val hash = conv(substring(md5(col(idCol).cast("string")), 1, 15),
-        16, 10).cast("long")
-      val agg = reader.parquet(inputDir)
-        .groupBy(col(groupCol))
-        .agg(graft.functions.HllAgg.hllSketch(hash, p).as("registers"))
-      val q: StreamingQuery = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      graft.operators.DistinctSketch.hllEstimate(
-        spark.table(sink), groupCol, p)
-    }
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    graft.operators.DistinctSketch.hllEstimate(
+      drainToMemory(spark, queryName, Seq(inputDir), "complete") { s =>
+        files(s, schema, inputDir, maxFilesPerTrigger)
+          .groupBy(col(groupCol))
+          .agg(graft.functions.HllAgg.hllSketch(idHash(idCol), p)
+            .as("registers"))
+      }, groupCol, p)
+
+  /** The 60-bit id hash both distinct-count sketches consume. */
+  private def idHash(idCol: String) =
+    conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10)
+      .cast("long")
 
   /** Generic STATELESS per-micro-batch transform runner: apply `fn` to
     * each batch and append the result to `outDir` — the streaming face
@@ -883,27 +645,17 @@ object EventStream {
     * normalization, scoring against a pinned artifact the caller closes
     * over). Stateless by construction: batch outputs union to exactly
     * the whole-corpus result, which is what lets a q-gate share the
-    * batch operator's oracle. AvailableNow + processAllAvailable, same
-    * harness shape as the dedicated runners above.
+    * batch operator's oracle. The pinned-artifact runners above are this
+    * runner with their own prepare/release around it.
     */
   def runTransformOnce(spark: SparkSession, schema: StructType,
       inputGlob: String, outDir: String, queryName: String,
       maxFilesPerTrigger: Option[Int] = None)
       (fn: DataFrame => DataFrame): DataFrame = {
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-      .parquet(inputGlob)
-    val q: StreamingQuery = stream.writeStream
-      .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        fn(batch).write.mode("append").parquet(outDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drainBatches(files(spark, schema, inputGlob, maxFilesPerTrigger),
+        queryName) { (batch, _) =>
+      fn(batch).write.mode("append").parquet(outDir)
+    }
     spark.read.parquet(outDir)
   }
 
@@ -920,48 +672,15 @@ object EventStream {
     */
   def runSessionizeOnce(spark: SparkSession, schema: StructType,
       inputDir: String, gapMillis: Long, queryName: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    implicit val sp: SparkSession = spark
-    val sink = s"${queryName}_${sinkSeq.incrementAndGet()}"
-    withAdaptiveStatePartitions(spark, Seq(inputDir)) {
-      val rd = spark.readStream.schema(schema)
-      val reader = maxFilesPerTrigger
-        .fold(rd)(n => rd.option("maxFilesPerTrigger", n))
-      val events = reader.parquet(inputDir)
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    drainToMemory(spark, queryName, stateInputs = Seq(inputDir)) { s =>
+      import s.implicits._
+      val events = files(s, schema, inputDir, maxFilesPerTrigger)
         .select(col("user_id").cast("long").as("userId"),
           col("event_id").cast("long").as("eventId"),
           col("ts_millis").cast("long").as("tsMillis"))
         .as[StatefulSessionize.Event]
-      val q: StreamingQuery = StatefulSessionize(events, gapMillis).toDF()
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sink).select(col("userId").as("user_id"),
-        col("eventId").as("event_id"), col("sessionId").as("session_id"))
-    }
-  }
-
-  def runOnce(spark: SparkSession, schema: StructType, inputDir: String,
-      windowDur: String, queryName: String): DataFrame = {
-    withAdaptiveStatePartitions(spark, Seq(inputDir)) {
-      val stream = spark.readStream.schema(schema).parquet(inputDir)
-      val agg = windowedCounts(
-        stream.withWatermark("ts", "10 minutes"), windowDur)
-      val q: StreamingQuery = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(queryName)
-    }
-  }
+      StatefulSessionize(events, gapMillis)(s).toDF()
+    }.select(col("userId").as("user_id"),
+      col("eventId").as("event_id"), col("sessionId").as("session_id"))
 }

@@ -4,10 +4,7 @@ import graft.catalog.VersionedTable
 import graft.fsops.FsOps
 import graft.operators.IncrementalAgg
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import java.util.concurrent.atomic.AtomicLong
 
 /** Streaming face of the maintenance loop: each micro-batch is folded
   * into an [[IncrementalAgg]] partial-aggregate state, and every trigger
@@ -30,8 +27,6 @@ import java.util.concurrent.atomic.AtomicLong
   * with engine-side incremental state.
   */
 object MaintainedView {
-
-  private val sinkSeq = new AtomicLong(0)
 
   /** Fold one batch (id `batchId`) into the versioned state at
     * `stateRoot`, committing the refreshed state as the next version.
@@ -182,22 +177,12 @@ object MaintainedView {
             s"a checkpoint at $cp with no offsets log") +
           ". Pass the original checkpoint or use a fresh stateRoot.")
     }
-    val reader = spark.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(m => reader.option("maxFilesPerTrigger", m))
-      .parquet(inputGlob)
-    val sink = stream.writeStream
-      .queryName(s"${queryName}_${sinkSeq.incrementAndGet()}")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        maintainBatch(spark, fsOps, stateRoot, batch, id, keys, sumCols,
-          weightCol, minCols, maxCols)
-      }
-      .trigger(Trigger.AvailableNow())
-    val q: StreamingQuery = checkpointLocation
-      .fold(sink)(cp => sink.option("checkpointLocation", cp))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    EventStream.drainBatches(
+        EventStream.files(spark, schema, inputGlob, maxFilesPerTrigger),
+        queryName, checkpointLocation) { (batch, id) =>
+      maintainBatch(spark, fsOps, stateRoot, batch, id, keys, sumCols,
+        weightCol, minCols, maxCols)
+    }
     VersionedTable.readLatest(spark, fsOps, stateRoot)
   }
 }

@@ -22,4 +22,23 @@ object GraftBridge {
     * complete job records. */
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A clone of `spark` — same SparkContext, conf, temp views and
+    * functions — with `overrides` set on the clone only, so a query can
+    * run under its own conf without changing the caller's session
+    * (`cloneSession` is `private[sql]`). */
+  def cloneSession(spark: SparkSession,
+      overrides: (String, String)*): SparkSession = {
+    val clone = spark.asInstanceOf[classic.SparkSession].cloneSession()
+    overrides.foreach { case (k, v) =>
+      clone.sessionState.conf.setConfString(k, v) }
+    clone
+  }
+
+  /** `df`'s analyzed plan as a frame of `spark`: hands a result settled
+    * in another session (e.g. a [[cloneSession]] clone) back to the
+    * caller's session without registering anything in its catalog. */
+  def rebind(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed)
 }

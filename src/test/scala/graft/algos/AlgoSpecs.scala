@@ -415,6 +415,28 @@ class DeltaMergeLoadSpec extends SparkSpec {
     spark.read.option("basePath", target).parquet(target)
       .select($"k").as[Int].collect() shouldBe Array(2)
   }
+
+  test("deletion-only NULL partition is rewritten (dir-name regression, " +
+      "same as DeltaLoad)") {
+    val target = tmp("dml_nd_t") + "/t"
+    val d1 = tmp("dml_nd_d1") + "/t"
+    val d2 = tmp("dml_nd_d2") + "/t"
+    Seq((1, 1, "gone soon", "", None: Option[String]),
+        (3, 1, "v3", "", Some("p1")))
+      .toDF("k", "ver", "v", "recordmode", "p").write.parquet(d1)
+    def params(d: String) = DeltaMergeLoadParams(
+      targetDir = target, deltaDir = d, format = DataFormat.Parquet,
+      businessKey = Seq("k"), technicalKey = Seq("ver"),
+      recordsToDelete = Seq("D"), targetPartitions = Seq("p"))
+    new DeltaMergeLoad(spark, fsOps, params(d1)).run()
+    spark.read.option("basePath", target).parquet(target).count() shouldBe 2
+    // the delta's ONLY record for the null partition is a deletion
+    Seq((1, 2, "x", "D", None: Option[String]))
+      .toDF("k", "ver", "v", "recordmode", "p").write.parquet(d2)
+    new DeltaMergeLoad(spark, fsOps, params(d2)).run()
+    spark.read.option("basePath", target).parquet(target)
+      .select($"k").as[Int].collect() shouldBe Array(3)
+  }
 }
 
 class SmallAlgoSpec extends SparkSpec {

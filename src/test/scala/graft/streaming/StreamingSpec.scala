@@ -29,20 +29,48 @@ class StatefulSessionizeSpec extends SparkSpec {
 class EventStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  test("streaming windowed counts equal the batch transform (stream/batch unification)") {
-    val dir = tmp("stream_in")
+  test("a state-sized runner leaves the caller's session alone: its " +
+      "conf and temp views are unchanged, and the derived state " +
+      "partition count still reaches the query") {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerStageSubmitted}
+    import org.apache.spark.sql.GraftBridge
+    val key = "spark.sql.shuffle.partitions"
+    val caller = spark.newSession()
+    caller.conf.set(key, "16")
+    val dir = tmp("stream_caller")
     val batch = Seq(
-      (java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "click", 1.0),
-      (java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), "click", 2.0),
-      (java.sql.Timestamp.valueOf("2024-01-01 00:07:00"), "view", 3.0))
-      .toDF("ts", "event_type", "value")
-    batch.write.parquet(dir + "/p")
-    val streamed = EventStream.runOnce(spark, batch.schema, dir + "/p",
-      "5 minutes", "es_test")
-    assertSameRows(streamed, EventStream.windowedCounts(batch, "5 minutes"))
-    streamed.filter($"event_type" === "click")
-      .select($"n_events", $"sum_value").as[(Long, Double)]
-      .collect() shouldBe Array((2L, 3.0))
+      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "a"),
+      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), "a-dup"),
+      (2L, java.sql.Timestamp.valueOf("2024-01-01 00:03:00"), "b"))
+      .toDF("k", "ts", "v")
+    batch.coalesce(1).write.parquet(dir + "/p")
+    def tempViews = caller.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val viewsBefore = tempViews
+    var seen = ""
+    val maxTasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        maxTasks.accumulateAndGet(e.stageInfo.numTasks, math.max(_, _))
+    }
+    GraftBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val keys =
+      try EventStream.runDedupOnce(caller, batch.schema, dir + "/p",
+          Seq("k"), "ts", "1 hour", "caller_dd",
+          prepare = { df => seen = caller.conf.get(key); df })
+        .select($"k").as[Long].collect().sorted
+      finally {
+        GraftBridge.drainListeners(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    keys shouldBe Array(1L, 2L)
+    seen shouldBe "16" // the caller's conf during the run
+    caller.conf.get(key) shouldBe "16"
+    // one tiny file sizes the state to 4 partitions, not the caller's 16
+    maxTasks.get should (be > 0 and be <= 4)
+    tempViews shouldBe viewsBefore
   }
 
   test("watermarked stream-stream interval join equals the batch join") {
