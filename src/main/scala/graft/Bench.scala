@@ -37,6 +37,9 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         -1.0 // a crashed query must not read as a fast success
       }
+      // untimed: free what the gate pinned for its result, so no later
+      // gate or pass reads it
+      finally spark.catalog.clearCache()
     }
     // THREE FULL PASSES over the suite, per-query median taken ACROSS
     // passes — same wall cost as back-to-back median-of-3, but a query's

@@ -1,13 +1,12 @@
 package graft.algos
 
-import graft.core.Algorithm
+import graft.core.{Algorithm, Pin}
 import graft.expr.{PartitionCriteria, SchemaOps}
 import graft.fsops.FsOps
 import graft.io.{AtomicWriter, DataFormat, LoadMode}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** CDC merge, 100% Spark-native (no Delta Lake): condense the delta records
   * to the latest version per business key, drop the active records they
@@ -24,11 +23,12 @@ import org.apache.spark.storage.StorageLevel
   *    a hash join Catalyst can broadcast — documented divergence for the
   *    better plan; identical results on key-unique data.)
   *
-  * Scale: the delta set is persisted once and reused (affected-partition
-  * discovery + anti-join + union); active records are pruned to affected
-  * partitions BEFORE the join via a Column predicate (Catalyst partition
-  * pruning — the reference's Row=>Boolean closure forced a full scan);
-  * the anti-join broadcasts when the condensed delta is small.
+  * Scale: the delta set is persisted once, reused (affected-partition
+  * discovery + anti-join + union) and released when the run ends; active
+  * records are pruned to affected partitions BEFORE the join via a Column
+  * predicate (Catalyst partition pruning — the reference's Row=>Boolean
+  * closure forced a full scan); the anti-join broadcasts when the
+  * condensed delta is small.
   */
 object DeltaMerge {
 
@@ -83,7 +83,7 @@ class DeltaLoad(val spark: SparkSession, fsOps: FsOps, p: DeltaLoadParams)
 
   override def transform(dfs: Vector[DataFrame]): Vector[DataFrame] = {
     val Vector(active, delta) = dfs
-    val deltaP = delta.persist(StorageLevel.MEMORY_AND_DISK)
+    val deltaP = holdUntilDone(Pin.cache(delta)).frame
 
     // prune actives to affected partitions with a Column predicate
     val activeScoped =

@@ -1,12 +1,11 @@
 package graft.algos
 
-import graft.core.Algorithm
+import graft.core.{Algorithm, Pin}
 import graft.expr.{DateComponents, PartitionCriteria, SchemaOps}
 import graft.fsops.FsOps
 import graft.io.{AtomicWriter, DataFormat, LoadMode}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** DeltaLakeLoad semantics without the delta-core dependency: a
   * system-of-record directory is merged (upsert + delete) with new data and
@@ -25,8 +24,10 @@ import org.apache.spark.storage.StorageLevel
   * Implementation: target.filter(affected) anti-join condensed-delta on the
   * business key, union surviving upserts — the same algebra as [[DeltaMerge]]
   * but with date-partition derivation and schema evolution, then an atomic
-  * partition rewrite. No full-outer row resolver is needed because
-  * condensation already picked the winning row per key.
+  * partition rewrite. The delta is persisted for the run (partition
+  * discovery, condensation) and released when it ends. No full-outer row
+  * resolver is needed because condensation already picked the winning row
+  * per key.
   */
 case class DeltaMergeLoadParams(
     targetDir: String,
@@ -61,7 +62,7 @@ class DeltaMergeLoad(val spark: SparkSession, fsOps: FsOps,
           p.targetPartitions)
       case _ => dfs.head
     }
-    val delta = withParts.persist(StorageLevel.MEMORY_AND_DISK)
+    val delta = holdUntilDone(Pin.cache(withParts)).frame
 
     val targetExists = fsOps.exists(p.targetDir) &&
       fsOps.listFilesRecursive(p.targetDir).exists(_.endsWith(".parquet"))

@@ -28,42 +28,28 @@ private[core] abstract class OverwriteAlgorithm(val spark: SparkSession,
   * analytics operators, ...): one scan of source_dir in the job's format,
   * the transform, one atomic overwrite of target_dir. Side inputs a
   * transform needs are read inside the transform. A transform whose
-  * operator pins a load-bearing persisted intermediate (e.g. Packing's
-  * prefix-sum frame) returns [[TransformAlgorithm.Out]] with a cleanup
-  * thunk, which runs AFTER the output write lands — releasing the cache
-  * early would reopen the double-execution window the persist closes, and
-  * never releasing it pins the frame for the life of the session.
+  * operator pins a load-bearing intermediate (e.g. Packing's prefix-sum
+  * frame) returns it as a [[Held]], which the run holds until the output
+  * write has landed.
   */
 private[core] object TransformAlgorithm {
   import scala.language.implicitConversions
 
-  /** Transform result: output frame + post-write cleanup. */
-  final case class Out(frame: DataFrame, cleanup: () => Unit = () => ())
-
-  /** Lets cleanup-free transforms stay written as `df => frame`. */
-  implicit def lift(frame: DataFrame): Out = Out(frame)
+  /** Lets pin-free transforms stay written as `df => frame`. */
+  implicit def lift(frame: DataFrame): Held = Held(frame)
 }
 
 private[core] class TransformAlgorithm(session: SparkSession, fsOps: FsOps,
     sourceDir: String, targetDir: String, format: DataFormat,
-    outputFilesNum: Option[Int], fn: DataFrame => TransformAlgorithm.Out,
+    outputFilesNum: Option[Int], fn: DataFrame => Held,
     targetPartitions: Seq[String] = Seq.empty)
     extends OverwriteAlgorithm(session, fsOps, targetDir, outputFilesNum,
       targetPartitions) {
-  private var cleanups: Vector[() => Unit] = Vector.empty
   override def read(): Vector[DataFrame] =
     Vector(format.read(spark, Map.empty, None, sourceDir))
   override def transform(dfs: Vector[DataFrame]): Vector[DataFrame] =
     dfs.map { df =>
-      val out = fn(df)
-      cleanups :+= out.cleanup
-      out.frame
-    }
-  override def write(dfs: Vector[DataFrame]): Vector[DataFrame] =
-    try super.write(dfs)
-    finally {
-      cleanups.foreach(_.apply())
-      cleanups = Vector.empty
+      holdUntilDone(fn(df)).frame
     }
 }
 
@@ -175,11 +161,13 @@ private final class Dispatch(spark: SparkSession, fsOps: FsOps,
       versionsToRetain = config.getIntOpt("num_versions_to_retain")
         .getOrElse(1)))
 
+  import TransformAlgorithm.lift
+
   /** The DataFrame transforms: each arm is the `df => ...` body
     * [[TransformAlgorithm]] runs over source_dir.
     */
   private val transforms
-      : PartialFunction[String, DataFrame => TransformAlgorithm.Out] = {
+      : PartialFunction[String, DataFrame => Held] = {
     case "Transpose" => df => Transpose(df,
         config.getSeq[String]("group_by_column"),
         config.getString("pivot_column"),
@@ -218,40 +206,33 @@ private final class Dispatch(spark: SparkSession, fsOps: FsOps,
         k = config.getIntOpt("minhash_k").getOrElse(32),
         bands = config.getIntOpt("bands").getOrElse(8),
         threshold = config.getDouble("jaccard_threshold", 0.5))
-    case "CorpusDedupClusters" => df => {
-        val cd = graft.operators.Dedup.dedupCorpusByComponents(df,
-          config.getString("id_column"), config.getString("text_column"),
-          shingleSize = config.getIntOpt("shingle_size").getOrElse(3),
-          k = config.getIntOpt("minhash_k").getOrElse(32),
-          bands = config.getIntOpt("bands").getOrElse(8),
-          threshold = config.getDouble("jaccard_threshold", 0.5),
-          // optional survivor policy: keep the highest-scored member of
-          // each cluster instead of the min id
-          scoreCol = config.getStringOpt("score_column"))
-        TransformAlgorithm.Out(cd.frame, () => cd.release())
-      }
+    case "CorpusDedupClusters" => df =>
+      graft.operators.Dedup.dedupCorpusByComponents(df,
+        config.getString("id_column"), config.getString("text_column"),
+        shingleSize = config.getIntOpt("shingle_size").getOrElse(3),
+        k = config.getIntOpt("minhash_k").getOrElse(32),
+        bands = config.getIntOpt("bands").getOrElse(8),
+        threshold = config.getDouble("jaccard_threshold", 0.5),
+        // optional survivor policy: keep the highest-scored member of
+        // each cluster instead of the min id
+        scoreCol = config.getStringOpt("score_column"))
     case "StratifiedSample" => df => graft.operators.Sampling.stratifiedSample(df,
         config.getString("id_column"), config.getString("strata_column"),
         fractions = numbers("fractions",
           config.getOpt[Map[String, Any]]("fractions").getOrElse(Map.empty))
           .map { case (k, n) => k -> n.doubleValue() },
         defaultFraction = config.getDouble("default_fraction", 1.0))
-    case "SequencePacking" => df => {
-        val packed = graft.operators.Packing.packDocuments(df,
-          config.getString("id_column"), config.getString("text_column"),
-          budgetTokens = config.getInt("budget_tokens").toLong)
-        TransformAlgorithm.Out(packed.frame, () => packed.release())
-      }
+    case "SequencePacking" => df => graft.operators.Packing.packDocuments(df,
+        config.getString("id_column"), config.getString("text_column"),
+        budgetTokens = config.getInt("budget_tokens").toLong)
     // packing-efficiency report (chunk-fill quantiles + mean fill)
     case "PackingStats" => df => {
         val budget = config.getInt("budget_tokens").toLong
         val packed = graft.operators.Packing.packDocuments(df,
           config.getString("id_column"), config.getString("text_column"),
           budgetTokens = budget)
-        TransformAlgorithm.Out(
-          graft.operators.Packing.packingStats(packed.frame, "n_tokens",
-            budget, config.getSeq[Double]("ps")),
-          () => packed.release())
+        Held(graft.operators.Packing.packingStats(packed.frame, "n_tokens",
+          budget, config.getSeq[Double]("ps")), packed)
       }
     case "Decontaminate" =>
       df => config.getStringOpt("benchmark_artifacts_dir") match {
@@ -262,12 +243,9 @@ private final class Dispatch(spark: SparkSession, fsOps: FsOps,
             spark.read.parquet(artsDir),
             config.getIntOpt("expected_shingles")
               .map(_.toLong).getOrElse(1000000L))
-          TransformAlgorithm.Out(
-            graft.operators.Decontaminate.decontaminatePrepared(df,
-              config.getString("id_column"),
-              config.getString("text_column"), pb,
-              config.getIntOpt("min_overlap").getOrElse(1)),
-            () => pb.release())
+          Held(graft.operators.Decontaminate.decontaminatePrepared(df,
+            config.getString("id_column"), config.getString("text_column"),
+            pb, config.getIntOpt("min_overlap").getOrElse(1)), pb)
         case None =>
           val bench = readInput("benchmark_dir")
           graft.operators.Decontaminate.decontaminate(df,
@@ -1312,8 +1290,7 @@ private final class Dispatch(spark: SparkSession, fsOps: FsOps,
           .filter(col("jaccard") >=
             config.getDouble("jaccard_threshold", 0.5))
           .select(col("id_a"), col("id_b"))
-        val cd = d.clusterStats(near)
-        TransformAlgorithm.Out(cd.frame, () => cd.release())
+        d.clusterStats(near)
       }
     // per-label embedding outliers (mislabel/garbage detector)
     case "EmbeddingOutliers" =>

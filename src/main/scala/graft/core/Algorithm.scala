@@ -16,8 +16,13 @@ trait Algorithm {
   def write(dataFrames: Vector[DataFrame]): Vector[DataFrame]
   def updateStatistics(dataFrames: Vector[DataFrame]): Unit = ()
 
-  final def run(): Unit = {
-    val written = write(transform(read()))
-    updateStatistics(written)
-  }
+  private var held = List.empty[Pinned]
+
+  /** Keeps `p` pinned until [[run]] ends: after updateStatistics, or when
+    * a stage fails. */
+  protected final def holdUntilDone[P <: Pinned](p: P): P = { held ::= p; p }
+
+  final def run(): Unit =
+    try updateStatistics(write(transform(read())))
+    finally { Pin.release(held: _*); held = Nil }
 }

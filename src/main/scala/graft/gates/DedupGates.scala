@@ -1,18 +1,9 @@
 package graft.gates
 
-import graft.algos._
-import graft.core.Tables
-import graft.expr.{DateComponents, PartitionCriteria, SchemaOps}
-import graft.catalog.{CatalogOps, TableWriter}
-import graft.fsops.FsOps
-import graft.io.{DataFormat, LoadMode}
 import graft.functions.PortableHash
 import graft.operators._
-import graft.streaming.EventStream
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import OracleHelpers._
 
 /** Gates: exact / near-duplicate detection and clustering. */
@@ -147,15 +138,14 @@ object DedupGates extends GateSupport {
       // feed three consumers (bucket signatures, the two cosine-verify
       // re-attach joins, the component keep) — unmaterialized, each
       // consumer re-runs the hash chain (same rows either way; eager
-      // localCheckpoint blocks release with the plan)
-      val vecs = graft.core.Spread(
+      // checkpoint blocks release with the plan)
+      val vecs = graft.core.Pin.checkpoint(graft.core.Spread(
           t(s, dir, "documents").select(col("doc_id"), col("text")))
         .select(col("doc_id").as("vec_id"),
           Dedup.tokens(col("text")).as("__tk"))
         .select(col("vec_id"),
           graft.functions.FeatureHashExpr.featureHash(col("__tk"), 64)
-            .as("embedding"))
-        .localCheckpoint()
+            .as("embedding")), eager = true).frame
       // bits = 16 / tables = 2, not q65's 8/4: small-vocab BoW vectors
       // are ALL correlated, so coarse buckets collapse much of the corpus
       // into candidate-heavy cells (measured: 8/4 tables->8.1 s, 16/4 ->

@@ -1,18 +1,9 @@
 package graft.gates
 
-import graft.algos._
-import graft.core.Tables
-import graft.expr.{DateComponents, PartitionCriteria, SchemaOps}
-import graft.catalog.{CatalogOps, TableWriter}
-import graft.fsops.FsOps
-import graft.io.{DataFormat, LoadMode}
 import graft.functions.PortableHash
 import graft.operators._
-import graft.streaming.EventStream
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import OracleHelpers._
 
 /** Gates: mergeable sketches: KMV, CMS, KLL, Bloom, heavy hitters. */
@@ -133,13 +124,13 @@ object SketchGates extends GateSupport {
       val artsDir = tmpDir("graft_q217_arts")
       Decontaminate.benchmarkArtifacts(bench, "qtext", n = 6)
         .write.mode("overwrite").parquet(artsDir)
+      // the prepared benchmark stays pinned while the result is read;
+      // the gate runner releases it after
       val pb = Decontaminate.prepareFromArtifacts(s.read.parquet(artsDir))
-      val out = Decontaminate.overlapsPrepared(docs, "doc_id", "text", pb,
+      Decontaminate.overlapsPrepared(docs, "doc_id", "text", pb,
           minOverlap = 1)
         .select(col("id").as("doc_id"), col("n_matched"),
           col("n_shingles"), col("overlap_ratio"))
-      out.persist(); out.count(); pb.release() // settle before release
-      out
     }),
 
     // sketch artifacts: two per-shard quantile sketches merged by

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -16,10 +17,10 @@ import org.apache.spark.sql.functions._
   *    symbol-pair counts weighted by word frequency) plus a narrow map
   *    applying the winning rule; only the single (left, right, count)
   *    winner row ever reaches the driver.
-  *  - rounds are chained through eager `localCheckpoint` with
-  *    release-previous (the connected-components loop convention,
-  *    Dedup.scala) so lineage and lambda depth stay constant across
-  *    hundreds of merges.
+  *  - rounds are chained through eager checkpoints, each round
+  *    releasing the previous one's blocks (the connected-components loop
+  *    convention, Dedup.scala), so lineage, lambda depth and pinned
+  *    storage stay constant across hundreds of merges.
   *
   * Determinism: ties on pair count break lexicographically (left, then
   * right), so the learned merge table is a pure function of the corpus —
@@ -84,15 +85,15 @@ object Bpe {
       nMerges: Int): DataFrame = {
     require(nMerges > 0, s"nMerges must be positive: $nMerges")
     val spark = docs.sparkSession
-    var words = wordCounts(docs, textCol)
-      .select(col("freq"), initialSymbols(col("word")).as("syms"))
-      .localCheckpoint()
+    var words = Pin.checkpoint(wordCounts(docs, textCol)
+      .select(col("freq"), initialSymbols(col("word")).as("syms")),
+      eager = true)
     val rules =
       scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var r = 0
     var done = false
     while (r < nMerges && !done) {
-      val top = pairCounts(words)
+      val top = pairCounts(words.frame)
         .orderBy(col("pair_count").desc, col("left_sym"), col("right_sym"))
         .limit(1).collect()
       if (top.isEmpty) done = true
@@ -100,15 +101,16 @@ object Bpe {
         val l = top(0).getString(0)
         val rt = top(0).getString(1)
         rules += ((r + 1, l, rt, l + rt, top(0).getLong(2)))
-        val next = words
-          .select(col("freq"), applyMerge(col("syms"), l, rt).as("syms"))
-          .localCheckpoint() // eager: safe to release the previous round
-        words.unpersist()
+        // eager: safe to release the previous round
+        val next = Pin.checkpoint(words.frame
+          .select(col("freq"), applyMerge(col("syms"), l, rt).as("syms")),
+          eager = true)
+        words.release()
         words = next
       }
       r += 1
     }
-    words.unpersist()
+    words.release()
     import spark.implicits._
     rules.toSeq
       .toDF("rank", "left_sym", "right_sym", "merged", "pair_count")
@@ -151,14 +153,18 @@ object Bpe {
     var words = wordCounts(docs, textCol)
       .select(col("word"), col("freq"),
         initialSymbols(col("word")).as("syms"))
+    var previous: Option[Pin] = None
     rules.grouped(maxRules).foreach { wave =>
       val applied = wave.foldLeft(col("syms")) { case (c, (l, rt)) =>
         applyMerge(c, l, rt)
       }
-      val next = words.select(col("word"), col("freq"), applied.as("syms"))
-        .localCheckpoint() // eager: safe to release the previous wave
-      words.unpersist()    // no-op on the initial un-checkpointed frame
-      words = next
+      // eager: safe to release the previous wave
+      val next = Pin.checkpoint(
+        words.select(col("word"), col("freq"), applied.as("syms")),
+        eager = true)
+      previous.foreach(_.release())
+      previous = Some(next)
+      words = next.frame
     }
     words
   }

@@ -74,14 +74,14 @@ object Classify {
     // ONE tokenizer pass over the seed slice: fold the explode straight
     // into per-(label, token) counts — bounded by |classes| × tokenizer
     // vocabulary, a sliver of the exploded stream — and MATERIALIZE it
-    // (eager localCheckpoint: self-releasing when the plan is dropped).
+    // (a checkpoint, released with the model's plan when it is dropped).
     // The vocabulary top-V, the <unk>-bucketed counts and the class
     // totals all derive from this one aggregate; the unmaterialized form
     // re-ran the explode pipeline FOUR times, once per duplicated
     // broadcast subtree (q245 plan audit, OPTIMIZATION_r13.md).
-    val ltCounts = toks.groupBy(col("label"), col("token"))
-      .agg(count(lit(1)).as("n_lt"))
-      .localCheckpoint(eager = false) // materialized by the vocab collect
+    val ltCounts = graft.core.Pin.checkpoint(
+      toks.groupBy(col("label"), col("token")).agg(count(lit(1)).as("n_lt")),
+      eager = false).frame // materialized by the vocab collect
 
     // global vocabulary over the seed slice: deterministic top-V,
     // collected — it is a ≤vocabSize driver artifact by construction

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.{Pin, Pinned}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -117,9 +118,9 @@ object Decontaminate {
     * benchmark (nothing can match). Call `release()` once no frame
     * returned by a `*Prepared` call is still needed.
     */
-  final case class PreparedBenchmark(bloom: Array[Byte], shingles: DataFrame,
-      n: Int) {
-    def release(): Unit = shingles.unpersist()
+  final case class PreparedBenchmark(bloom: Array[Byte], shingles: Pin,
+      n: Int) extends Pinned {
+    def release(): Unit = shingles.release()
   }
 
   /** Build a [[PreparedBenchmark]]: one benchmark scan computes the
@@ -129,25 +130,26 @@ object Decontaminate {
     */
   def prepareBenchmark(bench: DataFrame, benchTextCol: String, n: Int = 8,
       expectedShingles: Long = 1000000L): PreparedBenchmark = {
-    val sh = Dedup.shingleHashDF(
+    val sh = Pin.cache(Dedup.shingleHashDF(
         bench.withColumn("__bid", lit(0L)), "__bid", benchTextCol, n)
-      .select(explode(col("sh")).as("__h")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // size the bloom from the OBSERVED distinct-shingle count, capped at
-    // the caller's expectation: `expectedShingles` is a ceiling hint, and
-    // sizing a 1k-shingle eval suite for 1M items makes the serialized
-    // filter ~1 MB of plan literal that every micro-batch/shard replans
-    // and every task deserializes. The count is one pass over the
-    // (benchmark-sized, persisted) frame the bloom aggregation was about
-    // to materialize anyway. Filter size only moves the false-positive
-    // rate — exactness comes from the semi-join verification either way.
-    val nSh = sh.count()
-    val sized = math.max(64L, math.min(expectedShingles, nSh))
-    val bloom = sh
-      .agg(graft.functions.BloomSketch.bloomAgg(col("__h"), sized)
-        .as("bf"))
+      .select(explode(col("sh")).as("__h")).distinct())
+    PreparedBenchmark(bloomOf(sh.frame, expectedShingles), sh, n)
+  }
+
+  /** The bloom over a pinned (__h) shingle-hash frame, sized from the
+    * OBSERVED distinct-shingle count, capped at the caller's expectation:
+    * `expectedShingles` is a ceiling hint, and sizing a 1k-shingle eval
+    * suite for 1M items makes the serialized filter ~1 MB of plan literal
+    * that every micro-batch/shard replans and every task deserializes.
+    * The count is one pass over the (benchmark-sized, pinned) frame the
+    * bloom aggregation was about to materialize anyway. Filter size only
+    * moves the false-positive rate — exactness comes from the semi-join
+    * verification either way.
+    */
+  private def bloomOf(sh: DataFrame, expectedShingles: Long): Array[Byte] = {
+    val sized = math.max(64L, math.min(expectedShingles, sh.count()))
+    sh.agg(graft.functions.BloomSketch.bloomAgg(col("__h"), sized).as("bf"))
       .head().getAs[Array[Byte]]("bf")
-    PreparedBenchmark(bloom, sh, n)
   }
 
   /** Persistable benchmark artifacts — the decontamination side of the
@@ -172,20 +174,11 @@ object Decontaminate {
     */
   def prepareFromArtifacts(artifacts: DataFrame,
       expectedShingles: Long = 1000000L): PreparedBenchmark = {
-    val sh = artifacts.select(col("shingle_hash").as("__h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Pin.cache(artifacts.select(col("shingle_hash").as("__h")))
     val head = artifacts.select(col("n")).limit(1).collect()
     if (head.isEmpty) PreparedBenchmark(null, sh, 8)
-    else {
-      // observed-count sizing, as in [[prepareBenchmark]]
-      val nSh = sh.count()
-      val sized = math.max(64L, math.min(expectedShingles, nSh))
-      val bloom = sh
-        .agg(graft.functions.BloomSketch.bloomAgg(col("__h"),
-          sized).as("bf"))
-        .head().getAs[Array[Byte]]("bf")
-      PreparedBenchmark(bloom, sh, head(0).getInt(0))
-    }
+    else PreparedBenchmark(bloomOf(sh.frame, expectedShingles), sh,
+      head(0).getInt(0))
   }
 
   /** Phase 1+2 of the bloom regime against a prepared benchmark: the
@@ -206,7 +199,7 @@ object Decontaminate {
         .select(col("id"), explode(col("sh")).as("__h"))
         .filter(graft.functions.BloomSketch.mightContain(pb.bloom,
           col("__h")))
-        .join(pb.shingles, Seq("__h"), "left_semi")
+        .join(pb.shingles.frame, Seq("__h"), "left_semi")
         .groupBy(col("id")).agg(count(lit(1)).as("n_matched"))
         .filter(col("n_matched") >= minOverlap)
     }
@@ -250,7 +243,7 @@ object Decontaminate {
           .select(col("id"), explode(col("sh")).as("__h"))
           .filter(graft.functions.BloomSketch.mightContain(pb.bloom,
             col("__h")))
-          .join(pb.shingles, Seq("__h"), "left_semi")
+          .join(pb.shingles.frame, Seq("__h"), "left_semi")
           .select(col("id").as(idCol))
       else matchedPrepared(corpus, idCol, textCol, pb, minOverlap)
         .select(col("id").as(idCol))
@@ -312,19 +305,19 @@ object Decontaminate {
     * signatures and vectors of the benchmark side. Without the pin,
     * each call — each TRIGGER, on a stream — re-signs the benchmark.
     */
-  final case class PreparedSemantic(sigs: DataFrame, vecs: DataFrame,
-      bits: Int, tables: Int) {
-    def release(): Unit = { sigs.unpersist(); vecs.unpersist() }
+  final case class PreparedSemantic(sigs: Pin, vecs: Pin, bits: Int,
+      tables: Int) extends Pinned {
+    def release(): Unit = Pin.release(sigs, vecs)
   }
 
   def prepareSemantic(bench: DataFrame, benchIdCol: String,
       benchVecCol: String, bits: Int = 8,
       tables: Int = 4): PreparedSemantic = {
-    val sigs = Similarity.signatures(bench, benchIdCol, benchVecCol,
-      bits, tables).persist()
-    val vecs = bench.select(col(benchIdCol).as("__bid"),
-      col(benchVecCol).as("__bv")).persist()
-    sigs.count(); vecs.count()
+    val sigs = Pin.cache(Similarity.signatures(bench, benchIdCol,
+      benchVecCol, bits, tables))
+    val vecs = Pin.cache(bench.select(col(benchIdCol).as("__bid"),
+      col(benchVecCol).as("__bv")))
+    sigs.frame.count(); vecs.frame.count()
     PreparedSemantic(sigs, vecs, bits, tables)
   }
 
@@ -337,12 +330,12 @@ object Decontaminate {
     val cs = Similarity.signatures(corpus, idCol, vecCol, ps.bits,
       ps.tables)
     val cand = cs.as("c")
-      .join(broadcast(ps.sigs.as("b")),
+      .join(broadcast(ps.sigs.frame.as("b")),
         col("c.t") === col("b.t") && col("c.sig") === col("b.sig"))
       .select(col("c.id").as("__cid"), col("b.id").as("__bid"))
       .distinct()
     val cv = corpus.select(col(idCol).as("__cid"), col(vecCol).as("__cv"))
-    cand.join(broadcast(ps.vecs), "__bid").join(cv, "__cid")
+    cand.join(broadcast(ps.vecs.frame), "__bid").join(cv, "__cid")
       .select(col("__cid"),
         graft.functions.CosineSimilarityExpr.cosine(col("__cv"),
           col("__bv")).as("__cos"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.{Held, Pin, Pinned}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -620,11 +621,14 @@ object Dedup {
     * batch (BenchOne measured the q75 4-micro-batch gate paying it 4×).
     * `k`/`bands`/`shingleSize` must match the [[dedupArtifacts]] build;
     * they are carried on the handle so the consuming increment can't
-    * diverge. Release after the last increment ([[ClusterDedup]] pattern).
+    * diverge. Release after the last increment.
     */
-  final case class IncrementArtifacts(digests: DataFrame, banded: DataFrame,
-      shingleSize: Int, k: Int, bands: Int) {
-    def release(): Unit = { digests.unpersist(); banded.unpersist() }
+  final case class IncrementArtifacts(private val digestsPin: Pin,
+      private val bandedPin: Pin, shingleSize: Int, k: Int, bands: Int)
+      extends Pinned {
+    def digests: DataFrame = digestsPin.frame
+    def banded: DataFrame = bandedPin.frame
+    def release(): Unit = Pin.release(digestsPin, bandedPin)
   }
 
   /** Build a persisted [[IncrementArtifacts]] from a [[dedupArtifacts]]
@@ -633,9 +637,9 @@ object Dedup {
   def prepareIncrement(artifacts: DataFrame, shingleSize: Int = 3,
       k: Int = 32, bands: Int = 8): IncrementArtifacts =
     IncrementArtifacts(
-      artifacts.select(col("digest").as("__d")).distinct().persist(),
-      bandSignatures(artifacts.select(col("id"), col("sig")), "id_a", k,
-        bands).persist(),
+      Pin.cache(artifacts.select(col("digest").as("__d")).distinct()),
+      Pin.cache(bandSignatures(artifacts.select(col("id"), col("sig")),
+        "id_a", k, bands)),
       shingleSize, k, bands)
 
   /** [[dedupIncrement]] against a prepared, persisted landed side: each
@@ -667,15 +671,15 @@ object Dedup {
     // distinct, drop-list distinct; anti/semi joins dedup their own right
     // sides), the q75 jobs-per-trigger driver.
     val inCols = incoming.columns.toSeq.map(c => col(s"`$c`"))
-    val feat = graft.core.Spread(incoming)
+    val feat = Pin.checkpoint(graft.core.Spread(incoming)
       .withColumn("__graft_toks", tokens(col(s"`$textCol`")))
       .select(inCols ++ Seq(
         md5(col(s"`$textCol`")).as("__dg"),
         graft.functions.ShingleHashExpr
           .shingleHashes(col("__graft_toks"), shingleSize).as("__sh"),
         graft.functions.ShingleMinHashExpr
-          .signature(col("__graft_toks"), shingleSize, k).as("__sig")): _*)
-      .localCheckpoint(false)
+          .signature(col("__graft_toks"), shingleSize, k).as("__sig")): _*),
+      eager = false).frame
     val inPruned = feat.join(exDigests, col("__dg") === col("__d"),
       "left_anti")
     // candidates come from a LANDED-banded × BATCH-banded join, never a
@@ -725,17 +729,10 @@ object Dedup {
     * and re-runs the distinct (invisible at bench scale; a full landed-
     * corpus re-scan per batch at 100 TB). Pinning caches the distinct
     * once (first batch materializes it; later batches hit the cache).
-    * Release once the stream stops — same handle pattern as
-    * [[ClusterDedup]].
+    * Release the pin once the stream stops.
     */
-  final case class PinnedDigests(frame: DataFrame) {
-    def release(): Unit = frame.unpersist()
-  }
-
-  /** Pin `artifacts`' distinct digests for [[dedupStreamAgainst]]. */
-  def pinDigests(artifacts: DataFrame): PinnedDigests =
-    PinnedDigests(
-      artifacts.select(col("digest").as("__d")).distinct().persist())
+  def pinDigests(artifacts: DataFrame): Pin =
+    Pin.cache(artifacts.select(col("digest").as("__d")).distinct())
 
   /** Streaming face of [[dedupIncrement]]'s exact path: drop arriving
     * rows whose content digest is already in the landed [[dedupArtifacts]]
@@ -757,11 +754,11 @@ object Dedup {
     stream.join(artifacts.select(col("digest").as("__d")).distinct(),
       md5(col(textCol)) === col("__d"), "left_anti")
 
-  /** [[dedupStreamAgainst]] against a [[PinnedDigests]] handle: the
+  /** [[dedupStreamAgainst]] against [[pinDigests]]' pin: the
     * static side is the cached distinct, so each micro-batch pays one
     * in-memory scan instead of a landed-corpus re-scan + shuffle.
     */
-  def dedupStreamAgainst(stream: DataFrame, digests: PinnedDigests,
+  def dedupStreamAgainst(stream: DataFrame, digests: Pin,
       textCol: String): DataFrame =
     stream.join(digests.frame,
       md5(col(textCol)) === col("__d"), "left_anti")
@@ -781,18 +778,6 @@ object Dedup {
         graft.functions.ShingleMinHashExpr
           .signature(col("__toks"), shingleSize, k).as("sig"))
       .repartition(col("id"))
-
-  /** Result of a cluster-level dedup: the surviving rows plus the
-    * component-labels frame [[connectedComponents]] pinned for the
-    * anti-join (same handle pattern as [[Packing.Packed]] — releasing
-    * before the caller's action on `frame` would break the plan, since
-    * the labels' own lineage was truncated). Call `release()` once the
-    * output is written.
-    */
-  final case class ClusterDedup(frame: DataFrame,
-      private val labels: DataFrame) {
-    def release(): Unit = labels.unpersist()
-  }
 
   /** Structural telemetry for a near-dup pair graph: node/edge counts,
     * wedge count, triangle count, and the global clustering coefficient
@@ -819,15 +804,13 @@ object Dedup {
     // checkpoint each consumer that ReuseExchange cannot cover re-runs
     // it (guide §5 persist-discipline; eager localCheckpoint blocks are
     // GC-released with the plan)
-    val e = pairs
+    val e = Pin.checkpoint(pairs
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint()
-    val deg = e.select(col("u").as("id"))
+      .filter(col("u") =!= col("v")).distinct(), eager = true).frame
+    val deg = Pin.checkpoint(e.select(col("u").as("id"))
       .union(e.select(col("v").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .groupBy(col("id")).agg(count(lit(1)).as("deg")), eager = true).frame
     // orient each edge from the lower (deg, id) endpoint
     val du = deg.select(col("id").as("u"), col("deg").as("__du"))
     val dv = deg.select(col("id").as("v"), col("deg").as("__dv"))
@@ -901,15 +884,15 @@ object Dedup {
     * aggregations — sizes per component, then the histogram. The
     * returned handle's `release()` frees the label checkpoint.
     */
-  def clusterStats(pairs: DataFrame, maxIter: Int = 20): ClusterDedup = {
-    val comps = connectedComponents(pairs, maxIter)
-    val sizes = comps.groupBy(col("component"))
+  def clusterStats(pairs: DataFrame, maxIter: Int = 20): Held = {
+    val comps = components(pairs, maxIter, failOnNonConvergence = true)
+    val sizes = comps.frame.groupBy(col("component"))
       .agg(count(lit(1)).as("cluster_size"))
     val hist = sizes.groupBy(col("cluster_size"))
       .agg(count(lit(1)).as("n_clusters"),
         (sum(col("cluster_size")) - count(lit(1))).cast("long")
           .as("docs_removed"))
-    ClusterDedup(hist, comps)
+    Held(hist, comps)
   }
 
   /** Keep exactly ONE representative (the min id) per near-dup CLUSTER:
@@ -929,11 +912,11 @@ object Dedup {
     * left-anti shuffle join of the corpus against an id-only drop list.
     */
   def keepPerComponent(docs: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 20): ClusterDedup = {
-    val comps = connectedComponents(pairs, maxIter)
-    val drop = comps.filter(col("id") =!= col("component"))
+      maxIter: Int = 20): Held = {
+    val comps = components(pairs, maxIter, failOnNonConvergence = true)
+    val drop = comps.frame.filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
-    ClusterDedup(docs.join(drop, Seq(idCol), "left_anti"), comps)
+    Held(docs.join(drop, Seq(idCol), "left_anti"), comps)
   }
 
   /** Leakage-safe train/val/test split: assign every document its
@@ -974,28 +957,29 @@ object Dedup {
     */
   def keepBestPerComponent(docs: DataFrame, idCol: String,
       pairs: DataFrame, scoreCol: String,
-      maxIter: Int = 20): ClusterDedup = {
-    val comps = connectedComponents(pairs, maxIter)
+      maxIter: Int = 20): Held = {
+    val comps = components(pairs, maxIter, failOnNonConvergence = true)
     val scored = docs
       .select(col(idCol).as("id"), col(s"`$scoreCol`").as("__s"))
-      .join(comps, Seq("id"))
+      .join(comps.frame, Seq("id"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("component"))
       .orderBy(col("__s").desc_nulls_last, col("id"))
     val drop = scored.withColumn("__rk", row_number().over(w))
       .filter(col("__rk") > 1).select(col("id").as(idCol))
-    ClusterDedup(docs.join(drop, Seq(idCol), "left_anti"), comps)
+    Held(docs.join(drop, Seq(idCol), "left_anti"), comps)
   }
 
   /** [[dedupCorpus]] with the cluster-level keep policy: exact dedup,
     * MinHash-LSH candidates, Jaccard verify, then exactly one survivor
     * per connected near-dup component (instead of the greedy pairwise
-    * drop). Returns a [[ClusterDedup]] handle — release after writing.
+    * drop). Returns the survivors with their labels pinned — release
+    * after writing.
     */
   def dedupCorpusByComponents(docs: DataFrame, idCol: String,
       textCol: String, shingleSize: Int = 3, k: Int = 32, bands: Int = 8,
       threshold: Double = 0.5, maxIter: Int = 20,
-      scoreCol: Option[String] = None): ClusterDedup = {
+      scoreCol: Option[String] = None): Held = {
     val survivors = exactDedup(docs, idCol, textCol)
     val cand = minhashCandidates(survivors, idCol, textCol, shingleSize, k,
       bands)
@@ -1167,17 +1151,19 @@ object Dedup {
     * Storage: intermediate rounds release their checkpoint blocks as
     * soon as the next round materializes; the RETURNED frame is a
     * persisted, already-materialized cache (the final checkpoint is
-    * dropped once the cache is built) — callers release it with
-    * `result.unpersist()` when done, leaving zero residual storage.
+    * dropped once the cache is built) — callers release it by
+    * unpersisting the result when done, leaving zero residual storage.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-      failOnNonConvergence: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      failOnNonConvergence: Boolean = true): DataFrame =
+    components(pairs, maxIter, failOnNonConvergence).frame
+
+  /** [[connectedComponents]]' pinned result, for callers that release it
+    * through a handle.
+    */
+  private def components(pairs: DataFrame, maxIter: Int,
+      failOnNonConvergence: Boolean): Pin = {
+    val edges = edgesOf(pairs)
     // Scale-adaptive small-graph shortcut (the Spread convention — a size
     // trigger, never a constant tied to this box): near-dup pair graphs
     // are usually MUCH smaller than the corpus that produced them, and the
@@ -1193,19 +1179,26 @@ object Dedup {
     // pair graph — the distributed loop runs unchanged. The count
     // materializes the edge cache round 1 needed anyway; the collect is
     // bounded by the cap (≤ ~16 MB of ids).
-    val nEdges = edges.count()
+    val nEdges = edges.frame.count()
     if (nEdges > 0 && nEdges <= smallGraphMaxEdges) {
-      val rows = edges.collect()
+      val rows = edges.frame.collect()
       val comparable = rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1) &&
         r.get(0).isInstanceOf[Comparable[_]])
       if (comparable) {
-        val out = unionFindComponents(pairs.sparkSession, edges.schema, rows)
-        edges.unpersist()
+        val out = unionFindComponents(pairs.sparkSession,
+          edges.frame.schema, rows)
+        edges.release()
         return out
       }
     }
     connectedComponentsLoop(edges, maxIter, failOnNonConvergence)
   }
+
+  /** The bidirectional, distinct edge set of a pair graph, cached. */
+  private def edgesOf(pairs: DataFrame): Pin = Pin.cache(pairs
+    .select(col("id_a").as("src"), col("id_b").as("dst"))
+    .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+    .distinct())
 
   /** Driver-side union-find over a collected edge list — the small-graph
     * body of [[connectedComponents]]. Roots track the component MIN
@@ -1215,8 +1208,7 @@ object Dedup {
   private def unionFindComponents(
       spark: org.apache.spark.sql.SparkSession,
       edgeSchema: org.apache.spark.sql.types.StructType,
-      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+      rows: Array[org.apache.spark.sql.Row]): Pin = {
     val parent = new java.util.HashMap[Any, Any](rows.length * 2)
     def find(x: Any): Any = {
       var root = x
@@ -1248,12 +1240,12 @@ object Dedup {
       org.apache.spark.sql.Row(idv, find(idv))).toSeq
     // RDD-backed (not a LocalRelation literal): the label set can be
     // node-sized and must not ride inside every consumer's plan
-    val result = spark.createDataFrame(
+    val result = Pin.cache(spark.createDataFrame(
       spark.sparkContext.parallelize(labelRows,
         math.max(1, math.min(spark.sparkContext.defaultParallelism,
           1 + labelRows.size / 10000))),
-      schema).persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
+      schema))
+    result.frame.count()
     result
   }
 
@@ -1263,26 +1255,20 @@ object Dedup {
     * testable on graphs small enough for a spec.
     */
   private[graft] def connectedComponentsDistributed(pairs: DataFrame,
-      maxIter: Int = 20, failOnNonConvergence: Boolean = true): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    connectedComponentsLoop(edges, maxIter, failOnNonConvergence)
-  }
+      maxIter: Int = 20, failOnNonConvergence: Boolean = true): DataFrame =
+    connectedComponentsLoop(edgesOf(pairs), maxIter, failOnNonConvergence)
+      .frame
 
   /** The distributed label-propagation loop of [[connectedComponents]],
-    * over the PERSISTED bidirectional edge frame (released before
+    * over the pinned bidirectional edge frame (released before
     * returning).
     */
-  private[graft] def connectedComponentsLoop(edges: DataFrame,
-      maxIter: Int, failOnNonConvergence: Boolean): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  private def connectedComponentsLoop(edgePin: Pin, maxIter: Int,
+      failOnNonConvergence: Boolean): Pin = {
+    val edges = edgePin.frame
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
-    var checkpointed: DataFrame = null
+    var checkpointed: Option[Pin] = None
     var it = 0
     var converged = false
     while (!converged && it <= maxIter) {
@@ -1320,45 +1306,35 @@ object Dedup {
                 col("l.component"))
               .as("__changed"))
       }
-      val next = withJump
-        .localCheckpoint(eager = false) // materialized by the count below
-      val changed = next.filter(col("__changed")).count()
-      releaseCheckpoint(checkpointed)
-      checkpointed = next
-      labels = next.select(col("id"), col("component"))
+      // lazy: materialized by the count below
+      val next = Pin.checkpoint(withJump, eager = false)
+      val changed = next.frame.filter(col("__changed")).count()
+      checkpointed.foreach(_.release())
+      checkpointed = Some(next)
+      labels = next.frame.select(col("id"), col("component"))
       converged = changed == 0L
       it += 1
     }
-    edges.unpersist()
+    edgePin.release()
     if (!converged) {
       val msg = s"connectedComponents did not converge within $maxIter " +
         "rounds (a component's diameter exceeds maxIter) - labels are " +
         "partial; raise maxIter"
       if (failOnNonConvergence) {
-        releaseCheckpoint(checkpointed)
+        checkpointed.foreach(_.release())
         throw new IllegalStateException(msg)
       }
       org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
     }
     // hand back a cacheManager-backed frame so the documented release path
-    // (result.unpersist()) frees ALL remaining storage; the cache fills
+    // (unpersisting the result) frees ALL remaining storage; the cache fills
     // from the final checkpoint blocks (cheap — one pass over the labels),
     // after which the checkpoint itself is dropped
-    val result = labels.persist(StorageLevel.MEMORY_AND_DISK)
-    result.count()
-    releaseCheckpoint(checkpointed)
+    val result = Pin.cache(labels)
+    result.frame.count()
+    checkpointed.foreach(_.release())
     result
   }
-
-  /** Free the block storage behind a `localCheckpoint`ed frame (a
-    * `Dataset.unpersist()` only clears cacheManager entries, never
-    * checkpoint blocks — without this, every [[connectedComponents]] round
-    * would pin its blocks until driver GC).
-    */
-  private def releaseCheckpoint(df: DataFrame): Unit = if (df != null)
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** SimHash near-dup candidates: band the fingerprint into
     * `maxHamming + 1` chunks; by pigeonhole, any pair within Hamming

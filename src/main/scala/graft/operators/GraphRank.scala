@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** PageRank over an edge list — the iterative-graph companion to the
   * pointer-jumping connected components in [[Dedup]] (entity/importance
@@ -37,10 +37,16 @@ object GraphRank {
     * list is itself a join, and the unmaterialized form recomputed it
     * ~12× per step (q198 profile, OPTIMIZATION_r13.md).
     */
-  def initRanks(edges: DataFrame): DataFrame = {
-    val nodes = edges.select(col("src").as("id"))
+  def initRanks(edges: DataFrame): DataFrame =
+    uniformRanks(Pin.checkpoint(nodesOf(edges), eager = true).frame)
+
+  /** Every node appearing in `edges`, once. */
+  private def nodesOf(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).distinct()
-      .localCheckpoint()
+
+  /** 1/N ranks over a materialized node set. */
+  private def uniformRanks(nodes: DataFrame): DataFrame = {
     val n = nodes.count()
     require(n > 0, "empty edge list")
     nodes.withColumn("rank", lit(1.0 / n))
@@ -53,33 +59,21 @@ object GraphRank {
   def pageRankStep(ranks: DataFrame, edges: DataFrame,
       damping: Double = 0.85, scale: Long = 1000000000L,
       weightCol: Option[String] = None): DataFrame = {
-    // persist-discipline for the one-step face (guide §5: persist what is
-    // reused): the step reads `ranks` several times and `edges` three
-    // times (degrees, dangling anti-join, contribution fan-out) —
-    // unpinned, each reference re-runs the whole upstream lineage (for
-    // the purchase-graph gates, a join+distinct per reference). Pin edges
-    // for the duration, checkpoint ranks once (node-sized), run the WHOLE
-    // step as ONE eagerly-checkpointed action (the returned plan is a
-    // node-sized Scan ExistingRDD with no edge lineage — which is what
-    // lets the edge cache release before returning). Round-13 shipped a
-    // mid-plan checkpoint of the contribution aggregate instead; the
-    // round-14 interleaved A/B (GraphAbProbe: 2.41 s vs 1.76 s medians)
-    // showed its extra action cost more than the subtree dedup saved —
-    // the job COUNT, not the node-sized data, was the price. The
-    // convergence loop ([[pageRank]]) deliberately does NOT go through
-    // this face: it owns the edge pin for ALL iterations and checkpoints
-    // each round's output itself (the round-13 hang: a per-step unpersist
-    // evicted the loop's shared edge cache every iteration).
-    // own the pin only when the caller hasn't: Dataset.persist on an
-    // already-cached plan is a warn-no-op on the EXISTING entry, so an
-    // unconditional unpersist here would evict a cache the caller pinned
-    // across repeated step calls (the round-13 eviction class)
-    val owned = edges.storageLevel == StorageLevel.NONE
-    val e = if (owned) edges.persist(StorageLevel.MEMORY_AND_DISK) else edges
-    val r = ranks.localCheckpoint()
-    val out = stepCore(r, e, damping, scale, weightCol).localCheckpoint()
-    if (owned) e.unpersist()
-    out
+    // the step reads `ranks` several times and `edges` three times —
+    // unpinned, each reference re-runs the upstream lineage. Pin edges
+    // for the step (a caller's own edge cache is used as it is), pin
+    // ranks once, and run the WHOLE step as ONE eager checkpoint, so the
+    // returned plan has no edge lineage and both pins release before
+    // returning. A mid-plan checkpoint instead cost an extra job
+    // (round-14 A/B, GraphAbProbe: 2.41 s vs 1.76 s medians). The loop
+    // ([[pageRank]]) calls stepCore under its own edge pin: a per-step
+    // release evicted the loop's shared edge cache (the round-13 hang).
+    Pin.cache(edges).use { e =>
+      Pin.checkpoint(ranks, eager = true).use { r =>
+        Pin.checkpoint(stepCore(r, e, damping, scale, weightCol),
+          eager = true).frame
+      }
+    }
   }
 
   /** The step arithmetic over frames the CALLER has already pinned:
@@ -90,8 +84,25 @@ object GraphRank {
     */
   private[graft] def stepCore(r: DataFrame, e: DataFrame, damping: Double,
       scale: Long, weightCol: Option[String]): DataFrame = {
-    val n = r.count()
-    val nD = n.toDouble
+    val nD = r.count().toDouble
+    val (contrib, dmQF) = flows(r, e, scale, weightCol)
+    r.select(col("id"))
+      .join(contrib, r("id") === contrib("dst"), "left")
+      .crossJoin(broadcast(dmQF))
+      .select(col("id"),
+        (lit((1 - damping) / nD)
+          + lit(damping)
+            * (coalesce(col("__qin"), lit(0L)).cast("double")
+               / lit(scale.toDouble))
+          + lit(damping)
+            * (col("__dmq").cast("double") / lit(scale.toDouble)
+               / lit(nD)))
+          .as("rank"))
+  }
+
+  /** A step's quantized in-mass (dst, __qin) and dangling mass (__dmq). */
+  private def flows(r: DataFrame, e: DataFrame, scale: Long,
+      weightCol: Option[String]): (DataFrame, DataFrame) = {
     val deg = weightCol match {
       case None =>
         e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
@@ -127,18 +138,7 @@ object GraphRank {
               * col(w).cast("long") / col("__deg")).as("__q"))
           .groupBy(col("dst")).agg(sum(col("__q")).as("__qin"))
     }
-    r.select(col("id"))
-      .join(contrib, r("id") === contrib("dst"), "left")
-      .crossJoin(broadcast(dmQF))
-      .select(col("id"),
-        (lit((1 - damping) / nD)
-          + lit(damping)
-            * (coalesce(col("__qin"), lit(0L)).cast("double")
-               / lit(scale.toDouble))
-          + lit(damping)
-            * (col("__dmq").cast("double") / lit(scale.toDouble)
-               / lit(nD)))
-          .as("rank"))
+    (contrib, dmQF)
   }
 
   /** One PERSONALIZED PageRank iteration: the teleport mass (and the
@@ -154,45 +154,38 @@ object GraphRank {
       scale: Long = 1000000000L): DataFrame = {
     // same persist-discipline as [[pageRankStep]]: pin edges, checkpoint
     // the node-sized frames actions and the output both read
-    val s = seeds.select(col("id")).distinct().localCheckpoint()
-    val sCount = s.count()
-    require(sCount > 0, "empty seed set")
-    val sD = sCount.toDouble
-    // same pin-ownership guard and one-action layout as [[pageRankStep]]:
-    // the dangling scalar rides as a 1-row broadcast (same operand order,
-    // bit-identical ranks) and the OUTPUT is eagerly checkpointed so the
-    // edge pin releases with no edge lineage in the returned plan
-    val owned = edges.storageLevel == StorageLevel.NONE
-    val e = if (owned) edges.persist(StorageLevel.MEMORY_AND_DISK) else edges
-    val r = ranks.localCheckpoint()
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val dmQF = r.join(deg, r("id") === deg("src"), "left_anti")
-      .agg(coalesce(sum(floor(lit(scale.toDouble) * col("rank"))), lit(0L))
-        .as("__dmq"))
-    val srcQ = r.join(deg, r("id") === deg("src"))
-      .select(col("src"),
-        floor(lit(scale.toDouble) * col("rank") / col("__deg")).as("__q"))
-    val contrib = e.join(srcQ, "src")
-      .groupBy(col("dst")).agg(sum(col("__q")).as("__qin"))
-    val seedFlag = s.withColumn("__seed", lit(1))
-    val out = r.select(col("id"))
-      .join(contrib, r("id") === contrib("dst"), "left")
-      .join(seedFlag, Seq("id"), "left")
-      .crossJoin(broadcast(dmQF))
-      .select(col("id"),
-        (when(col("__seed").isNotNull,
-          lit((1 - damping) / sD)
-            + lit(damping)
-              * (col("__dmq").cast("double") / lit(scale.toDouble)
-                 / lit(sD)))
-          .otherwise(lit(0.0))
-          + lit(damping)
-            * (coalesce(col("__qin"), lit(0L)).cast("double")
-               / lit(scale.toDouble)))
-          .as("rank"))
-      .localCheckpoint()
-    if (owned) e.unpersist()
-    out
+    val seedPin =
+      Pin.checkpoint(seeds.select(col("id")).distinct(), eager = true)
+    seedPin.use { s =>
+      val sCount = s.count()
+      require(sCount > 0, "empty seed set")
+      val sD = sCount.toDouble
+      // same pin ownership and one-action layout as [[pageRankStep]]: the
+      // dangling scalar rides as a 1-row broadcast (same operand order,
+      // bit-identical ranks) and the OUTPUT is eagerly checkpointed so
+      // the pins release with no edge lineage in the returned plan
+      Pin.cache(edges).use { e =>
+        Pin.checkpoint(ranks, eager = true).use { r =>
+          val (contrib, dmQF) = flows(r, e, scale, None)
+          val seedFlag = s.withColumn("__seed", lit(1))
+          Pin.checkpoint(r.select(col("id"))
+            .join(contrib, r("id") === contrib("dst"), "left")
+            .join(seedFlag, Seq("id"), "left")
+            .crossJoin(broadcast(dmQF))
+            .select(col("id"),
+              (when(col("__seed").isNotNull,
+                lit((1 - damping) / sD)
+                  + lit(damping)
+                    * (col("__dmq").cast("double") / lit(scale.toDouble)
+                       / lit(sD)))
+                .otherwise(lit(0.0))
+                + lit(damping)
+                  * (coalesce(col("__qin"), lit(0L)).cast("double")
+                     / lit(scale.toDouble)))
+                .as("rank")), eager = true).frame
+        }
+      }
+    }
   }
 
   /** HITS hubs-and-authorities (Kleinberg) over an edge list — the
@@ -218,36 +211,36 @@ object GraphRank {
     require(iters >= 1 && iters <= 4,
       s"iters must be in [1,4] (integer scores square per round): $iters")
     // each round reads the edges twice and the normalization actions read
-    // them again — pin once, release after the totals settle (ownership
-    // guard: never evict a cache the caller already holds on this plan)
-    val owned = edges.storageLevel == StorageLevel.NONE
-    val e = if (owned) edges.persist(StorageLevel.MEMORY_AND_DISK) else edges
-    // node-sized and read by BOTH updates of every round — materialized,
-    // or each of the 2·iters references re-runs the union+distinct
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint()
-    var hub = nodes.withColumn("h", lit(1L))
-    var auth = nodes.withColumn("a", lit(0L))
-    var it = 0
-    while (it < iters) {
-      auth = e.join(hub, e("src") === hub("id"))
-        .groupBy(col("dst").as("id2")).agg(sum(col("h")).as("a"))
-        .select(col("id2").as("id"), col("a"))
-      auth = nodes.join(auth, Seq("id"), "left")
-        .select(col("id"), coalesce(col("a"), lit(0L)).as("a"))
-        .localCheckpoint() // reused by the hub update AND the output
-      hub = e.join(auth, e("dst") === auth("id"))
-        .groupBy(col("src").as("id2")).agg(sum(col("a")).as("h"))
-        .select(col("id2").as("id"), col("h"))
-      hub = nodes.join(hub, Seq("id"), "left")
-        .select(col("id"), coalesce(col("h"), lit(0L)).as("h"))
-        .localCheckpoint()
-      it += 1
+    // them again — pin once, release after the totals settle (a cache the
+    // caller already holds on this plan is used as it is)
+    val (auth, hub, aTot, hTot) = Pin.cache(edges).use { e =>
+      // node-sized and read by BOTH updates of every round — materialized,
+      // or each of the 2·iters references re-runs the union+distinct;
+      // released once auth/hub are materialized checkpoints
+      Pin.checkpoint(nodesOf(e), eager = true).use { nodes =>
+        var hub = nodes.withColumn("h", lit(1L))
+        var auth = nodes.withColumn("a", lit(0L))
+        var it = 0
+        while (it < iters) {
+          auth = e.join(hub, e("src") === hub("id"))
+            .groupBy(col("dst").as("id2")).agg(sum(col("h")).as("a"))
+            .select(col("id2").as("id"), col("a"))
+          // reused by the hub update AND the output
+          auth = Pin.checkpoint(nodes.join(auth, Seq("id"), "left")
+            .select(col("id"), coalesce(col("a"), lit(0L)).as("a")),
+            eager = true).frame
+          hub = e.join(auth, e("dst") === auth("id"))
+            .groupBy(col("src").as("id2")).agg(sum(col("a")).as("h"))
+            .select(col("id2").as("id"), col("h"))
+          hub = Pin.checkpoint(nodes.join(hub, Seq("id"), "left")
+            .select(col("id"), coalesce(col("h"), lit(0L)).as("h")),
+            eager = true).frame
+          it += 1
+        }
+        (auth, hub, auth.agg(sum(col("a"))).head.getLong(0).toDouble,
+          hub.agg(sum(col("h"))).head.getLong(0).toDouble)
+      }
     }
-    val aTot = auth.agg(sum(col("a"))).head.getLong(0).toDouble
-    val hTot = hub.agg(sum(col("h"))).head.getLong(0).toDouble
-    if (owned) e.unpersist() // auth/hub are materialized checkpoints by now
     auth.join(hub, Seq("id"))
       .select(col("id"), col("a").as("authority_raw"),
         col("h").as("hub_raw"),
@@ -257,51 +250,53 @@ object GraphRank {
 
   /** Iterate [[pageRankStep]] until the largest per-node rank change is
     * ≤ `tol` or `maxIters` is reached. Edges persist across rounds;
-    * rank frames chain through eager localCheckpoint-with-release (the
-    * connected-components loop convention) so lineage stays flat.
+    * rank frames chain through eager checkpoints, each round releasing
+    * the previous one (the connected-components loop convention), so
+    * lineage stays flat and only the returned ranks stay pinned.
     */
   def pageRank(edges: DataFrame, maxIters: Int = 20, tol: Double = 1e-6,
       damping: Double = 0.85, scale: Long = 0L,
       init: Option[DataFrame] = None,
       weightCol: Option[String] = None): DataFrame = {
     require(maxIters > 0, s"maxIters must be positive: $maxIters")
-    // ownership guard, as in [[pageRankStep]]
-    val owned = edges.storageLevel == StorageLevel.NONE
-    val e = if (owned) edges.persist(StorageLevel.MEMORY_AND_DISK) else edges
-    // warm-start face (the kmeansCentroids convention): resume from a
-    // saved (id, rank) table after a graph delta instead of re-mixing
-    // from uniform — near-converged starts settle in a few iterations
-    var ranks = init.map(_.select(col("id"), col("rank")))
-      .getOrElse(initRanks(e)).localCheckpoint()
-    // scale = 0 → N-adaptive grid: ranks sit near 1/N, so a FIXED grid
-    // loses relative precision as the graph grows (measured: 1.2% mass
-    // deficit after 3 iterations on a 1.6M-node graph at 1e9 — see
-    // GraphScaleProbe / PLANS.md); ~1e6 grid units per average rank
-    // keeps per-iteration loss ≤ ~1e-6 at any N, capped so k·scale
-    // stays far from Long range
-    val qScale =
-      if (scale > 0) scale
-      else {
-        val n = ranks.count()
-        math.min(1000000000000000L, math.max(1000000000L, n * 1000000L))
+    // edge ownership as in [[pageRankStep]]
+    Pin.cache(edges).use { e =>
+      // warm-start face (the kmeansCentroids convention): resume from a
+      // saved (id, rank) table after a graph delta instead of re-mixing
+      // from uniform — near-converged starts settle in a few iterations
+      var ranks = init match {
+        case Some(i) => Pin.checkpoint(i.select(col("id"), col("rank")),
+          eager = true)
+        case None => Pin.checkpoint(nodesOf(e), eager = true).use(nodes =>
+          Pin.checkpoint(uniformRanks(nodes), eager = true))
       }
-    var it = 0
-    var shift = Double.MaxValue
-    while (it < maxIters && shift > tol) {
-      // stepCore, not pageRankStep: the loop already owns the edge pin
-      // (for every iteration) and checkpoints each round's output —
-      // the public step's own pin/unpersist would evict this shared
-      // cache every iteration
-      val next = stepCore(ranks, e, damping, qScale, weightCol)
-        .localCheckpoint()
-      shift = next
-        .join(ranks.withColumnRenamed("rank", "__prev"), "id")
-        .agg(max(abs(col("rank") - col("__prev")))).head.getDouble(0)
-      ranks.unpersist()
-      ranks = next
-      it += 1
+      // scale = 0 → N-adaptive grid: ranks sit near 1/N, so a FIXED grid
+      // loses relative precision as the graph grows (measured: 1.2% mass
+      // deficit after 3 iterations on a 1.6M-node graph at 1e9 — see
+      // GraphScaleProbe / PLANS.md); ~1e6 grid units per average rank
+      // keeps per-iteration loss ≤ ~1e-6 at any N, capped so k·scale
+      // stays far from Long range
+      val qScale =
+        if (scale > 0) scale
+        else {
+          val n = ranks.frame.count()
+          math.min(1000000000000000L, math.max(1000000000L, n * 1000000L))
+        }
+      var it = 0
+      var shift = Double.MaxValue
+      while (it < maxIters && shift > tol) {
+        // stepCore, not pageRankStep: the loop already owns the edge pin
+        // (for every iteration) and checkpoints each round's output
+        val next = Pin.checkpoint(
+          stepCore(ranks.frame, e, damping, qScale, weightCol), eager = true)
+        shift = next.frame
+          .join(ranks.frame.withColumnRenamed("rank", "__prev"), "id")
+          .agg(max(abs(col("rank") - col("__prev")))).head.getDouble(0)
+        ranks.release()
+        ranks = next
+        it += 1
+      }
+      ranks.frame
     }
-    if (owned) e.unpersist()
-    ranks
   }
 }

@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.core.{Held, Pin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Sequence packing for training-data pipelines: assign each document a
   * chunk id so that documents, concatenated in a stable global order, fill
@@ -39,7 +39,8 @@ import org.apache.spark.storage.StorageLevel
   * slice assignment once; both the totals job and the final join read the
   * same cached rows. The cached frame is 4 narrow columns (~32 bytes/row
   * — ~30 GB cluster-wide per 10^9 docs, MEMORY_AND_DISK), and is released
-  * per call via [[Packing.Packed.release]] on the returned handle.
+  * per call by releasing the returned [[graft.core.Held]] once the output
+  * is written (earlier would reopen the double-execution window).
   *
   * Token offsets are exact integer arithmetic end to end (`div`/`%` on
   * longs — double `floor(a/b)` loses exactness past 2^53, within reach of
@@ -49,26 +50,13 @@ import org.apache.spark.storage.StorageLevel
   */
 object Packing {
 
-  /** Result of a packing call: the chunked frame plus the release handle
-    * for its load-bearing persisted intermediate. PER-CALL state — a
-    * shared "last persisted" singleton would let two concurrent packing
-    * jobs in one JVM clobber each other's handle and leak a cached frame.
-    * Unpersisting BEFORE the caller's action on `frame` would reopen the
-    * double-execution window the persist exists to close, so release is
-    * never automatic: call `release()` once the output is written.
-    */
-  final case class Packed(frame: DataFrame,
-      private val cached: DataFrame) {
-    def release(): Unit = cached.unpersist()
-  }
-
   /** Adds `chunk_id`, `offset_in_chunk` for concat-and-chunk at
     * `budgetTokens` per chunk, in `idCol` order. A document straddling
     * a boundary belongs to the chunk where it starts (standard
     * concat-then-split semantics).
     */
   def withChunkIds(docs: DataFrame, idCol: String, tokenCountCol: String,
-      budgetTokens: Long, slices: Int = 0): Packed = {
+      budgetTokens: Long, slices: Int = 0): Held = {
     val spark = docs.sparkSession
     import spark.implicits._
     val n = if (slices > 0) slices
@@ -82,29 +70,28 @@ object Packing {
     // single-task global sort)
     val w = Window.partitionBy(col("__slice")).orderBy(col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val withLocal = sliced.withColumn("__local_cum",
-        sum(col(tokenCountCol)).over(w) - col(tokenCountCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val withLocal = Pin.cache(sliced.withColumn("__local_cum",
+        sum(col(tokenCountCol)).over(w) - col(tokenCountCol)))
     // tiny driver collect: one row per slice — this action also populates
     // the cache, pinning the slice assignment for the final job
-    val totals = withLocal.groupBy(col("__slice"))
+    val totals = withLocal.frame.groupBy(col("__slice"))
       .agg(sum(col(tokenCountCol)).as("__t"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
     val sliceIds = totals.keys.toSeq.sorted
     val prefix = sliceIds.scanLeft(0L)((acc, s) => acc + totals(s))
     val offsets = broadcast(
       sliceIds.zip(prefix).toDF("__slice", "__offset"))
-    val assigned = withLocal.join(offsets, "__slice")
+    val assigned = withLocal.frame.join(offsets, "__slice")
       .withColumn("__before", col("__offset") + col("__local_cum"))
       .select(col(idCol),
         expr(s"__before div ${budgetTokens}L").as("chunk_id"),
         (col("__before") % budgetTokens).as("offset_in_chunk"))
-    Packed(docs.join(assigned, Seq(idCol)), withLocal)
+    Held(docs.join(assigned, Seq(idCol)), withLocal)
   }
 
   /** Convenience: tokenize with [[TextAnalysis.tokenCount]] then chunk. */
   def packDocuments(docs: DataFrame, idCol: String, textCol: String,
-      budgetTokens: Long): Packed =
+      budgetTokens: Long): Held =
     withChunkIds(
       docs.withColumn("n_tokens", TextAnalysis.tokenCount(col(textCol))),
       idCol, "n_tokens", budgetTokens)

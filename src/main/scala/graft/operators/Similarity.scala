@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1157,42 +1158,36 @@ object Similarity {
         col(vecCol).as("vec"))
       .withColumn("__rk", row_number().over(
         W.orderBy(round(col("rel"), 6).desc, col("doc_id"))))
-    var delta = r0.filter(col("__rk") === 1).drop("__rk")
-      .withColumn("mmr_rank", lit(1)).localCheckpoint(true)
+    var delta = Pin.checkpoint(r0.filter(col("__rk") === 1).drop("__rk")
+      .withColumn("mmr_rank", lit(1)), eager = true).frame
     // cosine ∈ [−1, 1], so −1 is "no selected neighbor yet"
-    var rest = r0.filter(col("__rk") > 1).drop("__rk")
-      .withColumn("__msim", lit(-1.0)).localCheckpoint(true)
+    var rest = Pin.checkpoint(r0.filter(col("__rk") > 1).drop("__rk")
+      .withColumn("__msim", lit(-1.0)), eager = true)
     val deltas = scala.collection.mutable.Buffer(delta)
     var i = 2
     while (i <= k) {
       val sel = delta.select(col("query_id"), col("vec").as("__sv"))
-      val scored = rest.join(sel, Seq("query_id"))
+      val scored = rest.frame.join(sel, Seq("query_id"))
         .withColumn("__msim",
           greatest(col("__msim"), cosine(col("vec"), col("__sv"))))
         .withColumn("__mmr", round(lit(lambda) * col("rel") -
           lit(1.0 - lambda) * col("__msim"), 6))
         .withColumn("__rk", row_number().over(
           W.orderBy(col("__mmr").desc, col("doc_id"))))
-      delta = scored.filter(col("__rk") === 1)
+      delta = Pin.checkpoint(scored.filter(col("__rk") === 1)
         .select(col("query_id"), col("doc_id"), col("rel"), col("vec"))
-        .withColumn("mmr_rank", lit(i)).localCheckpoint(true)
-      val nextRest = scored.filter(col("__rk") > 1)
+        .withColumn("mmr_rank", lit(i)), eager = true).frame
+      val nextRest = Pin.checkpoint(scored.filter(col("__rk") > 1)
         .select(col("query_id"), col("doc_id"), col("rel"), col("vec"),
-          col("__msim"))
-        .localCheckpoint(true)
-      releaseCheckpoint(rest)
+          col("__msim")), eager = true)
+      rest.release()
       rest = nextRest
       deltas += delta
       i += 1
     }
-    releaseCheckpoint(rest)
+    rest.release()
     deltas.reduce(_ unionByName _)
       .select(col("query_id"), col("doc_id"),
         round(col("rel"), 6).as("rel"), col("mmr_rank"))
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit = if (df != null)
-    df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
 }

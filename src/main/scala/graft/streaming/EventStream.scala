@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Pin
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -129,7 +130,8 @@ object EventStream {
     * state partitions than `spark` is configured with
     * ([[statePartitions]]), `build` gets a clone of `spark` carrying that
     * count: the caller's conf is never changed, and the sink's temp view
-    * is registered in the clone, not in the caller's catalog.
+    * is registered in the clone, not in the caller's catalog. The clone's
+    * streaming listener bus is detached once the query stops.
     */
   private def drainToMemory(spark: SparkSession, queryName: String,
       stateInputs: Seq[String] = Nil, outputMode: String = "append")
@@ -141,7 +143,11 @@ object EventStream {
     val q = build(session).writeStream.outputMode(outputMode)
       .format("memory").queryName(sink)
       .trigger(Trigger.AvailableNow()).start()
-    try q.processAllAvailable() finally q.stop()
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      if (session ne spark) GraftBridge.detachStreamingBus(session)
+    }
     GraftBridge.rebind(spark, session.table(sink))
   }
 
@@ -286,13 +292,14 @@ object EventStream {
       rightKey: String, leftTime: String, rightTime: String,
       tieBreak: String, outDir: String, queryName: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val pinned = history.persist()
-    pinned.count() // materialize before the first trigger
-    try runTransformOnce(spark, schema, inputGlob, outDir, queryName,
-        maxFilesPerTrigger) { batch =>
-      graft.operators.AsOfJoin(batch, pinned, col(leftKey), col(rightKey),
-        col(leftTime), col(rightTime), col(tieBreak))
-    } finally pinned.unpersist()
+    Pin.cache(history).use { pinned =>
+      pinned.count() // materialize before the first trigger
+      runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+          maxFilesPerTrigger) { batch =>
+        graft.operators.AsOfJoin(batch, pinned, col(leftKey),
+          col(rightKey), col(leftTime), col(rightTime), col(tieBreak))
+      }
+    }
   }
 
   /** Streaming PQ encode — the streaming face of
@@ -314,13 +321,14 @@ object EventStream {
       inputGlob: String, codebooks: DataFrame, idCol: String,
       vecCol: String, dim: Int, m: Int, outDir: String, queryName: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val pinned = codebooks.persist()
-    pinned.count() // materialize before the first trigger
-    try runTransformOnce(spark, schema, inputGlob, outDir, queryName,
-        maxFilesPerTrigger) { batch =>
-      graft.operators.Similarity.pqEncode(batch, idCol, vecCol, dim, m,
-        pinned)
-    } finally pinned.unpersist()
+    Pin.cache(codebooks).use { pinned =>
+      pinned.count() // materialize before the first trigger
+      runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+          maxFilesPerTrigger) { batch =>
+        graft.operators.Similarity.pqEncode(batch, idCol, vecCol, dim, m,
+          pinned)
+      }
+    }
   }
 
   /** Streaming benchmark decontamination — the streaming face of
@@ -420,13 +428,14 @@ object EventStream {
       textCol: String, outDir: String, queryName: String,
       maxDfFraction: Double = 0.1,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val arts = artifacts.persist()
-    val qs = queries.persist()
-    try runTransformOnce(spark, schema, inputGlob, outDir, queryName,
-        maxFilesPerTrigger) { batch =>
-      graft.operators.Similarity.bm25ScoreAgainst(batch, idCol, textCol,
-        qs, queryIdCol, queryTextCol, arts, maxDfFraction = maxDfFraction)
-    } finally { arts.unpersist(); qs.unpersist() }
+    Pin.cache(artifacts).use(arts => Pin.cache(queries).use { qs =>
+      runTransformOnce(spark, schema, inputGlob, outDir, queryName,
+          maxFilesPerTrigger) { batch =>
+        graft.operators.Similarity.bm25ScoreAgainst(batch, idCol, textCol,
+          qs, queryIdCol, queryTextCol, arts,
+          maxDfFraction = maxDfFraction)
+      }
+    })
   }
 
   /** Streaming DSIR scoring — the streaming face of

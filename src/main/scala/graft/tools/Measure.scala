@@ -62,20 +62,22 @@ object Measure {
     val fn = SparkEntry.queries(name)
     val l = new JobListener
     spark.sparkContext.addSparkListener(l)
-    // per rep: (wall s, rows, frame, listener totals after the rep); the
+    // per rep: (wall s, rows, plan, listener totals after the rep); the
     // bus is drained after the clock stops, so each rep's deltas are its own
     val runs = try (1 to reps).map { _ =>
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val n = df.count()
       val wall = (System.nanoTime() - t0) / 1e9
+      // untimed, as in Bench: explain, then release what the gate pinned
+      val plan = planDir.map(_ => df.queryExecution.explainString(FormattedMode))
+      spark.catalog.clearCache()
       GraftBridge.drainListeners(spark)
-      (wall, n, df, l.totals)
+      (wall, n, plan, l.totals)
     } finally spark.sparkContext.removeSparkListener(l)
     planDir.foreach { dir =>
       Files.createDirectories(Paths.get(dir))
-      Files.writeString(Paths.get(dir, s"$name.txt"),
-        runs.last._3.queryExecution.explainString(FormattedMode))
+      Files.writeString(Paths.get(dir, s"$name.txt"), runs.last._3.get)
     }
     val deltas = (Seq.fill(4)(0L) +: runs.map(_._4)).sliding(2)
       .map { case Seq(a, b) => b.zip(a).map(p => p._1 - p._2) }.toSeq

@@ -35,6 +35,19 @@ object GraftBridge {
     clone
   }
 
+  /** Takes the streaming listener bus of `spark`'s query manager (a
+    * private field) off the SparkContext's bus, where Spark leaves it for
+    * the life of the JVM. Only for a session that starts no more streams,
+    * such as a [[cloneSession]] clone whose query stopped. */
+  def detachStreamingBus(spark: SparkSession): Unit = {
+    val manager = spark.asInstanceOf[classic.SparkSession].streams
+    val field = manager.getClass.getDeclaredField("listenerBus")
+    field.setAccessible(true)
+    spark.sparkContext.listenerBus.removeListener(
+      field.get(manager).asInstanceOf[
+        org.apache.spark.scheduler.SparkListenerInterface])
+  }
+
   /** `df`'s analyzed plan as a frame of `spark`: hands a result settled
     * in another session (e.g. a [[cloneSession]] clone) back to the
     * caller's session without registering anything in its catalog. */

@@ -913,6 +913,40 @@ class JobRunnerSpec extends SparkSpec {
     bq shouldBe Map(1L -> 3L, 2L -> 1L)
   }
 
+  test("DeltaLoad and DeltaMergeLoad release their delta cache when the " +
+      "run ends") {
+    def params(json: String): String = {
+      val p = tmp("jr_dl_par") + "/p.json"
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json)
+      p
+    }
+    val active = tmp("jr_dl_a") + "/t"
+    val delta = tmp("jr_dl_d") + "/t"
+    Seq((1, 0, "v1"), (2, 0, "v2")).toDF("k", "ver", "v").write.parquet(active)
+    Seq((1, 1, "v1b", "N"), (3, 1, "v3", "N"))
+      .toDF("k", "ver", "v", "recordmode").write.parquet(delta)
+    // id SETS, not counts (see the SequencePacking release check)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    JobRunner.execute(spark, "DeltaLoad", params(
+      s"""{"active_records_dir": "$active",
+         | "delta_records_file_path": "$delta", "file_format": "parquet",
+         | "business_key": ["k"], "technical_key": ["ver"]}""".stripMargin))
+    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    spark.read.parquet(active).select($"k", $"v").as[(Int, String)]
+      .collect().sorted shouldBe Array((1, "v1b"), (2, "v2"), (3, "v3"))
+
+    val target = tmp("jr_dml_t") + "/t"
+    val beforeMerge = spark.sparkContext.getPersistentRDDs.keySet
+    JobRunner.execute(spark, "DeltaMergeLoad", params(
+      s"""{"target_dir": "$target", "source_dir": "$delta",
+         | "file_format": "parquet", "business_key": ["k"],
+         | "technical_key": ["ver"]}""".stripMargin))
+    (spark.sparkContext.getPersistentRDDs.keySet -- beforeMerge) shouldBe
+      empty
+    spark.read.parquet(target).select($"k").as[Int].collect().sorted shouldBe
+      Array(1, 3)
+  }
+
   test("unknown algorithm names are rejected") {
     val paramsPath = tmp("jr_bad") + "/params.json"
     java.nio.file.Files.writeString(

@@ -73,6 +73,28 @@ class EventStreamSpec extends SparkSpec {
     tempViews shouldBe viewsBefore
   }
 
+  test("a state-sized runner detaches its session clone's streaming " +
+      "listener bus: a warm caller gains at most one bus per run") {
+    import org.apache.spark.sql.GraftTestBridge.streamingBuses
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "16")
+    val dir = tmp("stream_bus")
+    val batch = Seq(
+      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), "a"),
+      (2L, java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), "b"))
+      .toDF("k", "ts", "v")
+    batch.coalesce(1).write.parquet(dir + "/p")
+    def run(i: Int): Long = EventStream.runDedupOnce(caller, batch.schema,
+      dir + "/p", Seq("k"), "ts", "1 hour", s"bus_$i").count()
+    run(0) // warm: the caller's own query manager registers its bus
+    val before = streamingBuses(spark)
+    val runs = 3
+    (1 to runs).foreach(i => run(i) shouldBe 2L)
+    // the runner's clone detaches after stop(); what remains is one bus
+    // per run that Spark registers for the stream's own session
+    (streamingBuses(spark) - before) should be <= runs
+  }
+
   test("watermarked stream-stream interval join equals the batch join") {
     val dir = tmp("stream_ssj")
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$m%02d:00")
