@@ -31,9 +31,8 @@ object LogFold {
     * — with the COMMIT step (which differs between the plain and the
     * bucketed layout) supplied by the caller. `commitOne` sees the
     * fresh derived log its fold was based on and must commit PINNED to
-    * it (throwing [[java.util.ConcurrentModificationException]] /
-    * [[VersionedTable.VersionRaceExhausted]] when a racer won — that
-    * stops this poll, leaving the rest to the winner).
+    * it (throwing [[java.util.ConcurrentModificationException]] when a
+    * racer won — that stops this poll, leaving the rest to the winner).
     */
   private def foldLoop(fsOps: FsOps, baseRoot: String,
       derivedRoot: String, tagPrefix: String)(
@@ -74,8 +73,6 @@ object LogFold {
       catch {
         // a racing poll won the pinned commit: stop, it owns the rest
         case _: java.util.ConcurrentModificationException =>
-          return folded.result()
-        case _: VersionedTable.VersionRaceExhausted =>
           return folded.result()
       }
       folded += c.version
@@ -169,21 +166,18 @@ object LogFold {
             "(rebuild under a fresh derived root to change it)")
         new BucketedState(spark, fsOps, derivedRoot, last.version)
       }
+      // pin to the state version THIS fold read (not whatever is latest
+      // at commit time): a racing poll that committed in between must
+      // conflict, or its folds would be silently reverted
+      val read = derivedLog.lastOption.map(_.version).getOrElse(0L)
       fold(state, c) match {
         case Full(df) =>
-          vt.writeBucketed(df, fsOps, derivedRoot, ts = c.ts, bucketBy,
-            nBuckets, op = tag, maxAttempts = 1,
-            pin = Some(derivedLog.lastOption.map(_.version)
-              .getOrElse(0L) + 1))
+          vt.writeLanded(df, fsOps, derivedRoot, c.ts, tag,
+            vt.bucketed(fsOps, bucketBy, nBuckets, delta = None),
+            pin = Some(read))
         case Delta(content, touched) =>
-          // pin to the state version THIS fold read (not whatever is
-          // latest at commit time): a racing poll that committed in
-          // between must conflict, or its folds would be silently
-          // reverted in the touched buckets
           vt.writeBucketedDelta(spark, fsOps, derivedRoot, ts = c.ts,
-            content, touched, op = tag,
-            expectedParentVersion =
-              Some(derivedLog.lastOption.map(_.version).getOrElse(0L)))
+            content, touched, op = tag, expectedParentVersion = Some(read))
       }
     }
 }

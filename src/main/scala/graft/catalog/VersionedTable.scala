@@ -2,7 +2,6 @@ package graft.catalog
 
 import graft.config.JsonConfig
 import graft.fsops.FsOps
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,13 +26,14 @@ import org.apache.spark.sql.functions._
   * Commit protocol: land the snapshot in a WRITER-PRIVATE data directory
   * (unreferenced, hence invisible — and never contended: racing writers
   * each stage under their own uuid), then CREATE-EXCLUSIVE the commit
-  * file that binds the next version number to that directory.
-  * `FileSystem.create(path, overwrite = false)` is the atomic no-clobber
-  * primitive on HDFS; of two racers for version N exactly one wins, and
-  * the loser retries the COMMIT ONLY under N+1 — its already-landed data
-  * is not rewritten. On object stores without atomic create, the log
-  * directory needs the usual external coordination layer — same caveat
-  * every lakehouse format documents.
+  * file that binds the next version number to that directory, through
+  * [[graft.fsops.FsOps.publishExclusive]]. Of two racers for version N
+  * exactly one wins. An unpinned loser retries the COMMIT ONLY under
+  * N+1 — its already-landed data is not rewritten; a pinned loser (a
+  * read-modify-write) fails with
+  * [[java.util.ConcurrentModificationException]]. On object stores
+  * without atomic rename, the log directory needs the usual external
+  * coordination layer — same caveat every lakehouse format documents.
   *
   * Scale notes (100 TB):
   *  - the log holds one TINY json per commit; planning a read is an
@@ -77,19 +77,18 @@ object VersionedTable {
     * ordering contract). Uncommitted data dirs (crashed or in-flight
     * writers) are invisible by construction, and so are in-flight commit
     * files: writers stage content under a `.…tmp` name (filtered here)
-    * and publish by rename, so every `*.json` this lists is complete.
+    * and publish it whole ([[FsOps.publishExclusive]]), so every `*.json`
+    * this lists is complete.
     */
   def commits(fsOps: FsOps, root: String): Seq[Commit] =
     fsOps.ls(commitsDir(root)).filter(_.endsWith(".json"))
       .map(f => parseCommit(fsOps, s"${commitsDir(root)}/$f"))
       .sortBy(_.version)
 
-  /** Raised internally when every commit attempt lost its version race —
-    * the typed signal [[writeIf]] maps to a concurrency conflict (a
-    * string-matched message would be a fragile contract).
+  /** Unpinned commits retry a lost version race this many times, each
+    * against the refreshed log; a pinned commit gets exactly one attempt.
     */
-  private[catalog] final class VersionRaceExhausted(msg: String)
-      extends java.io.IOException(msg)
+  private val MaxAttempts = 5
 
   private def parseCommit(fsOps: FsOps, path: String): Commit = {
     val c = JsonConfig.fromFile(fsOps, path)
@@ -132,9 +131,8 @@ object VersionedTable {
     * supplied epoch millis — keeps replays and tests deterministic).
     */
   def write(df: DataFrame, fsOps: FsOps, root: String, ts: Long,
-      op: String = "write", maxAttempts: Int = 5): Long =
-    writeLanded(df, fsOps, root, ts, op, maxAttempts, Seq.empty,
-      observed((d, dir) => d.write.parquet(dir)))
+      op: String = "write"): Long =
+    writeLanded(df, fsOps, root, ts, op, Plain)
 
   /** Optimistic-concurrency [[write]]: commit ONLY if the table is still
     * at `expectedVersion` (what the writer read before computing `df`).
@@ -147,27 +145,23 @@ object VersionedTable {
     */
   def writeIf(df: DataFrame, fsOps: FsOps, root: String, ts: Long,
       expectedVersion: Long, op: String = "write"): Long = {
-    // cheap pre-check (the landing write is the expensive part)...
-    val latest = commits(fsOps, root).lastOption.map(_.version).getOrElse(0L)
-    if (latest != expectedVersion)
-      throw new java.util.ConcurrentModificationException(
-        s"$root moved to version $latest; this writer based its " +
-          s"snapshot on $expectedVersion — re-read and recompute")
-    // ...then a SINGLE commit attempt PINNED to expectedVersion + 1 (the
-    // pin matters: an unpinned attempt would recompute `next` and happily
-    // publish at a later number, which is exactly the lost-update OCC
-    // exists to prevent). Losing the race for that number IS the conflict.
-    try writeLanded(df, fsOps, root, ts, op, maxAttempts = 1, Seq.empty,
-      observed((d, dir) => d.write.parquet(dir)),
-      pin = Some(expectedVersion + 1))
-    catch {
-      case _: VersionRaceExhausted =>
-        throw new java.util.ConcurrentModificationException(
-          s"$root was committed concurrently while this writer (based " +
-            s"on version $expectedVersion) was landing — re-read and " +
-            "recompute")
-    }
+    // cheap pre-check (the landing write is the expensive part); a
+    // commit landing after it loses the pinned commit's race instead
+    requireBase(root,
+      commits(fsOps, root).lastOption.map(_.version).getOrElse(0L),
+      expectedVersion)
+    writeLanded(df, fsOps, root, ts, op, Plain, pin = Some(expectedVersion))
   }
+
+  /** A read-modify-write's stale-base check: the table must still be at
+    * the version the writer derived its content from.
+    */
+  private def requireBase(root: String, latest: Long, expected: Long)
+      : Unit =
+    if (latest != expected)
+      throw new java.util.ConcurrentModificationException(
+        s"$root moved to version $latest; this writer's content was " +
+          s"derived from version $expected — re-read and recompute")
 
   /** Name of the per-commit change-set dir INSIDE the data dir: the `_`
     * prefix keeps it invisible to `spark.read.parquet(dataDir)` (plain
@@ -196,22 +190,10 @@ object VersionedTable {
     * it, same as any CDC log.
     */
   def writeWithChanges(df: DataFrame, changes: DataFrame, fsOps: FsOps,
-      root: String, ts: Long, keys: Seq[String], op: String = "write",
-      maxAttempts: Int = 5, pin: Option[Long] = None): Long = {
-    require(keys.nonEmpty && keys.forall(df.columns.contains),
-      s"cdc keys (${keys.mkString(",")}) must name snapshot columns " +
-        s"(${df.columns.mkString(",")})")
-    val want = (df.columns :+ "change_type").sorted
-    require(changes.columns.sorted.sameElements(want),
-      s"change set carries ${changes.columns.sorted.mkString(",")} but " +
-        s"this snapshot needs exactly ${want.mkString(",")}")
-    writeLanded(df, fsOps, root, ts, op, maxAttempts,
-      Seq("cdc_keys" -> keys.sorted.mkString(",")),
-      observed { (d, dir) =>
-        d.write.parquet(dir)
-        changes.write.parquet(s"$dir/$ChangesDir")
-      }, pin)
-  }
+      root: String, ts: Long, keys: Seq[String], op: String = "write")
+      : Long =
+    writeLanded(df, fsOps, root, ts, op,
+      Plain.recording(changes, keys, df.columns))
 
   /** MERGE: publish (base \ deleteKeys) ∪ upserts as the next version,
     * WITH the change set computed and recorded at write time — the
@@ -309,15 +291,9 @@ object VersionedTable {
         val touched = base.as("b")
           .join(broadcast(deltaKeys).as("dk"), nullSafe("b", "dk"),
             "left_semi")
-        try writeWithChanges(next, classify(touched), fsOps, root, ts,
-          keys, op, maxAttempts = 1, pin = Some(baseV + 1))
-        catch {
-          case _: VersionRaceExhausted =>
-            throw new java.util.ConcurrentModificationException(
-              s"$root was committed concurrently during this merge " +
-                s"(based on version $baseV) — retry against the new " +
-                "latest")
-        }
+        writeLanded(next, fsOps, root, ts, op,
+          Plain.recording(classify(touched), keys, next.columns),
+          pin = Some(baseV))
       case Some(bc) =>
         // BUCKETED chain: the merge never touches the whole table —
         // only the buckets the delta keys hash into are read (pruned
@@ -352,43 +328,81 @@ object VersionedTable {
     }
   }
 
-  /** Shared commit protocol behind every write face: `land` materializes
-    * the snapshot into the writer-private dir and returns the rows it
-    * landed; `extra` key/value pairs (index dimensions, partition-column
-    * types) are recorded in the commit so readers can discover the
-    * committed layout.
+  /** The one commit path behind every write face. `landing` lands the
+    * snapshot in a WRITER-PRIVATE dir (invisible until a commit names
+    * it, and never contended: racing writers each land under their own
+    * uuid), then [[FsOps.publishExclusive]] binds the next version
+    * number to it. The OCC rule: `pin` is the version the writer READ —
+    * a pinned commit gets exactly one attempt, at `pin + 1`, and losing
+    * it is a [[java.util.ConcurrentModificationException]]; an unpinned
+    * commit retries a lost race up to [[MaxAttempts]] times against the
+    * refreshed log, its landed data staying where it is. Any failure
+    * before the commit is visible deletes the landing dir; a visible
+    * commit's dir is never touched.
     */
-  private def writeLanded(df: DataFrame, fsOps: FsOps,
-      root: String, ts: Long, op: String, maxAttempts: Int,
-      extra: Seq[(String, String)], land: (DataFrame, String) => Long,
+  private[catalog] def writeLanded(df: DataFrame, fsOps: FsOps,
+      root: String, ts: Long, op: String, landing: Landing,
       pin: Option[Long] = None): Long = {
-    // writer-private landing dir: concurrent writers never touch each
-    // other's files, and until a commit references it the dir is invisible
     val name = "d-" + java.util.UUID.randomUUID.toString.take(8)
     val dir = s"$root/$name"
-    val rows = land(df, dir)
-    val record = commitJson(ts, op, rows, name, extra)
-    var attempt = 0
-    var committed = -1L
-    while (committed < 0 && attempt < maxAttempts) {
-      attempt += 1
-      val next = pin.getOrElse(
-        commits(fsOps, root).lastOption.map(_.version + 1).getOrElse(1L))
-      // lost races retry the COMMIT ONLY against the refreshed log (the
-      // landed data stays where it is); every OTHER failure propagates —
-      // publishExclusive never leaves a visible half-written commit
-      if (publishExclusive(fsOps, commitFile(root, next),
-          s"""{"version": $next, ${record.stripPrefix("{")}"""))
-        committed = next
+    try {
+      val record = commitJson(ts, op, landing.land(df, dir), name,
+        landing.extra)
+      Iterator.fill(if (pin.isDefined) 1 else MaxAttempts) {
+        val next = pin.getOrElse(
+          commits(fsOps, root).lastOption.map(_.version).getOrElse(0L)) + 1
+        if (fsOps.publishExclusive(commitFile(root, next),
+            s"""{"version": $next, ${record.stripPrefix("{")}""")) Some(next)
+        else None
+      }.collectFirst { case Some(v) => v }.getOrElse(
+        throw new java.util.ConcurrentModificationException(pin.fold(
+          s"could not commit to $root after $MaxAttempts attempts " +
+            "(lost every version race)")(v =>
+          s"$root was committed concurrently at version ${v + 1} while " +
+            s"this writer (based on version $v) was landing — re-read " +
+            "and recompute")))
+    } catch {
+      case e: Throwable =>
+        fsOps.deleteAll(dir) // not visible: no commit names this dir
+        throw e
     }
-    if (committed < 0) {
-      fsOps.deleteAll(dir)
-      throw new VersionRaceExhausted(
-        s"could not commit to $root after $maxAttempts attempts " +
-          "(lost every version race)")
-    }
-    committed
   }
+
+  /** How one layout lands a snapshot in the writer-private `dir`: the
+    * commit fields that describe the layout to readers, and the write,
+    * which returns the rows it landed.
+    */
+  private[catalog] final case class Landing(extra: Seq[(String, String)],
+      land: (DataFrame, String) => Long) {
+
+    /** This landing plus a WRITER-RECORDED change set in
+      * `dir/_changes`, bound by the same commit. `changes` must carry
+      * the snapshot's `columns` plus `change_type`, and the keys must
+      * name snapshot columns.
+      */
+    def recording(changes: DataFrame, keys: Seq[String],
+        columns: Seq[String]): Landing = {
+      require(keys.nonEmpty && keys.forall(columns.contains),
+        s"cdc keys (${keys.mkString(",")}) must name snapshot columns " +
+          s"(${columns.mkString(",")})")
+      val want = (columns :+ "change_type").sorted
+      require(changes.columns.sorted.sameElements(want),
+        s"change set carries ${changes.columns.sorted.mkString(",")} but " +
+          s"this snapshot needs exactly ${want.mkString(",")}")
+      Landing(extra :+ ("cdc_keys" -> keys.sorted.mkString(",")),
+        (d, dir) => {
+          val rows = land(d, dir)
+          changes.write.parquet(s"$dir/$ChangesDir")
+          rows
+        })
+    }
+  }
+
+  /** The plain layout: one parquet dir, nothing recorded beyond the
+    * commit.
+    */
+  private val Plain =
+    Landing(Seq.empty, observed((d, dir) => d.write.parquet(dir)))
 
   /** A landing whose row count rides on the write itself (`observe` =
     * one map-side CollectMetrics in the write job) instead of re-reading
@@ -431,87 +445,6 @@ object VersionedTable {
       s""" "path": "$name"$tail}"""
   }
 
-  /** Atomic no-half-states commit publication: the content is fully
-    * written (and closed) into a hidden writer-private `.….tmp` staging
-    * file — invisible to [[commits]] — then published with a rename onto
-    * the final name. Returns false when the race for this version number
-    * was lost (the commit file already exists); any OTHER failure cleans
-    * up the staging file and propagates, so no code path can leave a
-    * visible empty or partial commit. HDFS rename is atomic and refuses
-    * an existing destination, exactly the no-clobber primitive
-    * `create(p, overwrite = false)` gives — minus its visible-while-
-    * writing window. On a raw local FS, POSIX rename REPLACES the
-    * destination, so rename-based publication cannot be exclusive there
-    * (observed: two racing bootstrap polls both cleared the exists-check
-    * and both "won" the same version by clobber — the round-13
-    * MaintainedViewSpec flake); for the `file:` scheme the staged commit
-    * is therefore published by HARD LINK creation, which POSIX defines
-    * as atomic fail-if-exists, making the race loser detectable exactly
-    * like on HDFS.
-    */
-  private[graft] def publishExclusive(fsOps: FsOps, p: String,
-      content: String): Boolean = {
-    val pp = new Path(p)
-    val f = fsOps.fs(pp)
-    if (!f.exists(pp.getParent)) f.mkdirs(pp.getParent)
-    val tmp = new Path(pp.getParent,
-      "." + pp.getName + "." + java.util.UUID.randomUUID.toString.take(8)
-        + ".tmp")
-    try {
-      val out = f.create(tmp, false) // private name: never contended
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-      val won =
-        if (f.getScheme == "file") {
-          // atomic fail-if-exists publication on POSIX: link, then drop
-          // the staging name (the link target IS the published commit)
-          try {
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(pp.toUri.getPath),
-              java.nio.file.Paths.get(tmp.toUri.getPath))
-            f.delete(tmp, false)
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              f.delete(tmp, false); false
-            // local mounts exposed under file: that don't support hard
-            // links (some NFS/SMB/FAT/overlay configs): fall back to the
-            // exists-check + rename publication — racy on raw POSIX but
-            // functional, and strictly no worse than the pre-link code
-            case _: UnsupportedOperationException |
-                _: java.nio.file.FileSystemException =>
-              if (f.exists(pp)) { f.delete(tmp, false); false }
-              else {
-                val renamed =
-                  try f.rename(tmp, pp)
-                  catch {
-                    case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-                      false
-                    case _: java.nio.file.FileAlreadyExistsException => false
-                  }
-                if (!renamed) f.delete(tmp, false)
-                renamed
-              }
-          }
-        } else {
-          if (f.exists(pp)) { f.delete(tmp, false); return false } // lost
-          val renamed =
-            try f.rename(tmp, pp)
-            catch {
-              case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-                false
-              case _: java.nio.file.FileAlreadyExistsException => false
-            }
-          if (!renamed) f.delete(tmp, false)
-          renamed
-        }
-      won
-    } catch {
-      case e: Throwable =>
-        if (f.exists(tmp)) f.delete(tmp, false)
-        throw e
-    }
-  }
-
   /** Snapshot read at an explicit version. Fails fast (naming the
     * version) when the version was never committed or its data was
     * vacuumed — never silently serves a different snapshot.
@@ -525,9 +458,7 @@ object VersionedTable {
       return readVersionBuckets(spark, fsOps, root, version,
         0 until c.nBuckets.get)
     val dir = dataDir(root, c)
-    require(fsOps.exists(dir),
-      s"version $version of $root was vacuumed; earliest readable is " +
-        s"${earliestReadable(fsOps, root).getOrElse(-1L)}")
+    requireReadable(fsOps, root, version, dir)
     val raw = spark.read.parquet(dir)
     // hive-layout snapshots: partition values come back as STRINGS
     // (partition type inference is disabled engine-wide — Session
@@ -545,9 +476,15 @@ object VersionedTable {
   def readLatest(spark: SparkSession, fsOps: FsOps, root: String): DataFrame =
     readVersion(spark, fsOps, root, latestVersion(fsOps, root))
 
-  private def earliestReadable(fsOps: FsOps, root: String): Option[Long] =
-    commits(fsOps, root)
-      .find(c => fsOps.exists(dataDir(root, c))).map(_.version)
+  /** Fail by name when `dir`, holding data of `version`, was vacuumed —
+    * never by a missing path, never by silently serving another snapshot.
+    */
+  private def requireReadable(fsOps: FsOps, root: String, version: Long,
+      dir: String): Unit =
+    require(fsOps.exists(dir),
+      s"version $version of $root was vacuumed; earliest readable is " +
+        commits(fsOps, root).find(c => fsOps.exists(dataDir(root, c)))
+          .fold(-1L)(_.version))
 
   /** Time travel by timestamp: the newest version committed at or before
     * `ts` (the usual AS OF semantics).
@@ -767,10 +704,15 @@ object VersionedTable {
     * lakehouse file-skipping contract, per committed snapshot.
     */
   def writeIndexed(df: DataFrame, fsOps: FsOps, root: String, ts: Long,
-      indexCol: String, numFiles: Int, op: String = "write",
-      maxAttempts: Int = 5): Long =
-    writeLanded(df, fsOps, root, ts, op, maxAttempts,
-      Seq("index_col" -> indexCol, "index_kind" -> "range"),
+      indexCol: String, numFiles: Int, op: String = "write"): Long =
+    writeLanded(df, fsOps, root, ts, op, ranged(indexCol, numFiles))
+
+  /** The range layout: `numFiles` files range-sorted on `indexCol` plus
+    * their min/max manifest in `dir/_manifest`; rows come from the
+    * manifest's footers.
+    */
+  private def ranged(indexCol: String, numFiles: Int): Landing =
+    Landing(Seq("index_col" -> indexCol, "index_kind" -> "range"),
       (d, dir) => graft.operators.Layout.writeSortedWithManifest(
         d.sparkSession, d, dir, indexCol, numFiles,
         s"$dir/$ManifestDir"))
@@ -788,15 +730,15 @@ object VersionedTable {
     * range-predicate cases.
     */
   def writePartitioned(df: DataFrame, fsOps: FsOps, root: String,
-      ts: Long, partitionCols: Seq[String], op: String = "write",
-      maxAttempts: Int = 5): Long = {
+      ts: Long, partitionCols: Seq[String], op: String = "write"): Long = {
     require(partitionCols.nonEmpty, "at least one partition column")
     val partTypes = partitionCols.map(c =>
       c + ":" + df.schema(c).dataType.catalogString).mkString(",")
-    writeLanded(df, fsOps, root, ts, op, maxAttempts,
+    writeLanded(df, fsOps, root, ts, op, Landing(
       Seq("index_col" -> partitionCols.mkString(","),
         "index_kind" -> "hive", "part_types" -> partTypes),
-      observed((d, dir) => d.write.partitionBy(partitionCols: _*).parquet(dir)))
+      observed((d, dir) =>
+        d.write.partitionBy(partitionCols: _*).parquet(dir))))
   }
 
   /** Internal partition column of bucketed snapshots — never part of
@@ -837,34 +779,49 @@ object VersionedTable {
     * read, recomputable from the key by [[bucketOf]].
     */
   def writeBucketed(df: DataFrame, fsOps: FsOps, root: String, ts: Long,
-      bucketBy: String, nBuckets: Int, op: String = "write",
-      maxAttempts: Int = 5, pin: Option[Long] = None): Long = {
-    require(nBuckets >= 1, "nBuckets must be positive")
-    require(df.columns.contains(bucketBy),
-      s"bucket column $bucketBy not in ${df.columns.mkString(",")}")
-    require(!df.columns.contains(BucketCol),
-      s"$BucketCol is reserved for the internal bucket layout")
-    writeLanded(df, fsOps, root, ts, op, maxAttempts,
-      Seq("bucket_col" -> bucketBy, "n_buckets" -> nBuckets.toString),
+      bucketBy: String, nBuckets: Int, op: String = "write"): Long =
+    writeLanded(df, fsOps, root, ts, op,
+      bucketed(fsOps, bucketBy, nBuckets, delta = None))
+
+  /** The bucketed layout: every row tagged with its [[bucketOf]] bucket
+    * and each bucket co-located before the partitioned write, so it
+    * lands as one `bucket_id=K/` file instead of tasks × buckets
+    * fragments. A `delta` — (touched buckets, bucket map) — records its
+    * map and fails in-plan on a row outside its touched buckets (it
+    * would silently shadow or lose data). A FULL snapshot refuses to
+    * commit with zero rows: a partitioned write of zero rows leaves no
+    * files, so no parquet schema would survive to read it back — a
+    * maintenance bootstrap on an empty base fails this poll and
+    * self-heals once the base has rows.
+    */
+  private[catalog] def bucketed(fsOps: FsOps, bucketBy: String, n: Int,
+      delta: Option[(Seq[Int], String)]): Landing = {
+    require(n >= 1, "nBuckets must be positive")
+    Landing(Seq("bucket_col" -> bucketBy, "n_buckets" -> n.toString) ++
+        delta.map("bucket_map" -> _._2),
       observed { (d, dir) =>
-        d.withColumn(BucketCol, bucketOf(col(bucketBy), nBuckets))
-          // co-locate each bucket before the partitioned write: one file
-          // per bucket instead of tasks × buckets fragments
-          .repartition(col(BucketCol))
+        require(d.columns.contains(bucketBy)
+            && !d.columns.contains(BucketCol),
+          s"bucketed content must carry $bucketBy and not $BucketCol " +
+            s"(reserved for the internal bucket layout); got " +
+            d.columns.mkString(","))
+        val tagged = d.withColumn(BucketCol, bucketOf(col(bucketBy), n))
+        delta.fold(tagged) { case (touched, _) =>
+          tagged.withColumn(BucketCol,
+            when(col(BucketCol).isin(touched.map(Int.box): _*),
+              col(BucketCol))
+              .otherwise(raise_error(concat(
+                lit("delta row lands in untouched bucket "),
+                col(BucketCol),
+                lit(s" (touched: ${touched.sorted.mkString(",")})")))))
+        }.repartition(col(BucketCol))
           .write.partitionBy(BucketCol).parquet(dir)
-        // an ALL-EMPTY full snapshot would commit fine but be forever
-        // unreadable (a partitioned write of zero rows leaves no files,
-        // so no parquet schema survives to recover) — refuse BEFORE the
-        // commit publishes, so a maintenance bootstrap on an empty base
-        // fails this poll and self-heals once the base has rows
-        val fsOps2 = new FsOps(
-          df.sparkSession.sparkContext.hadoopConfiguration)
-        require(fsOps2.ls(dir).exists(_.startsWith(s"$BucketCol=")),
-          s"refusing to commit an EMPTY bucketed snapshot to $root — " +
-            "no parquet schema would survive to read it back; commit " +
-            "after the first rows land (or use a plain write)")
-      },
-      pin)
+        require(delta.isDefined
+            || fsOps.ls(dir).exists(_.startsWith(s"$BucketCol=")),
+          s"refusing to commit an EMPTY bucketed snapshot at $dir — no " +
+            "parquet schema would survive to read it back; commit after " +
+            "the first rows land (or use a plain write)")
+      })
   }
 
   /** Delta commit onto a bucketed table: `touchedData` is the COMPLETE
@@ -900,11 +857,7 @@ object VersionedTable {
     // without it, a racing writer that committed in between would be
     // silently built upon (this writer's touched content came from the
     // OLDER state — publishing it on top reverts the racer's changes)
-    expectedParentVersion.filter(_ != parent.version).foreach { v =>
-      throw new java.util.ConcurrentModificationException(
-        s"$root moved to version ${parent.version}; this delta was " +
-          s"derived from version $v — re-read and recompute")
-    }
+    expectedParentVersion.foreach(requireBase(root, parent.version, _))
     val bucketBy = parent.bucketCol.getOrElse(
       throw new IllegalArgumentException(
         s"latest version ${parent.version} of $root is not bucketed — " +
@@ -914,53 +867,20 @@ object VersionedTable {
     // inherits every bucket — a no-change version still gets consumed
     require(touched.forall(b => b >= 0 && b < n),
       s"touched buckets ${touched.mkString(",")} out of range [0, $n)")
-    require(touchedData.columns.contains(bucketBy)
-        && !touchedData.columns.contains(BucketCol),
-      s"touched content must carry $bucketBy and not $BucketCol")
-    // optional WRITER-RECORDED change set, as in [[writeWithChanges]]:
-    // lands in the commit's own dir, so changeFeed over a bucketed
-    // delta commit is the same O(delta) scan plain recorded commits get
-    val changeExtra = changes.toSeq.flatMap { case (feed, keys) =>
-      require(keys.nonEmpty && keys.forall(touchedData.columns.contains),
-        s"cdc keys (${keys.mkString(",")}) must name table columns " +
-          s"(${touchedData.columns.mkString(",")})")
-      val want = (touchedData.columns :+ "change_type").sorted
-      require(feed.columns.sorted.sameElements(want),
-        s"change set carries ${feed.columns.sorted.mkString(",")} but " +
-          s"this table needs exactly ${want.mkString(",")}")
-      Seq("cdc_keys" -> keys.sorted.mkString(","))
-    }
     val parentDirs = bucketDirs(parent)
     val touchedSet = touched.toSet
     val mapStr = (0 until n).map { b =>
       val d = if (touchedSet(b)) "self" else parentDirs(b)
       s"$b:$d"
     }.mkString(",")
-    val guarded = touchedData
-      .withColumn(BucketCol, bucketOf(col(bucketBy), n))
-      .withColumn(BucketCol,
-        when(col(BucketCol).isin(touched.map(Int.box): _*),
-          col(BucketCol))
-          .otherwise(raise_error(concat(
-            lit("delta row lands in untouched bucket "),
-            col(BucketCol),
-            lit(s" (touched: ${touched.sorted.mkString(",")})")))))
-    try writeLanded(guarded, fsOps, root, ts, op, maxAttempts = 1,
-      Seq("bucket_col" -> bucketBy, "n_buckets" -> n.toString,
-        "bucket_map" -> mapStr) ++ changeExtra,
-      observed { (d, dir) =>
-        d.repartition(col(BucketCol))
-          .write.partitionBy(BucketCol).parquet(dir)
-        changes.foreach { case (feed, _) =>
-          feed.write.parquet(s"$dir/$ChangesDir") }
-      },
-      pin = Some(parent.version + 1))
-    catch {
-      case _: VersionRaceExhausted =>
-        throw new java.util.ConcurrentModificationException(
-          s"$root was committed concurrently during this delta commit " +
-            s"(based on version ${parent.version}) — re-read and retry")
-    }
+    val landing = bucketed(fsOps, bucketBy, n, Some(touched -> mapStr))
+    // an optional WRITER-RECORDED change set lands in the commit's own
+    // dir, so changeFeed over a bucketed delta commit is the same
+    // O(delta) scan plain recorded commits get
+    writeLanded(touchedData, fsOps, root, ts, op,
+      changes.fold(landing) { case (feed, keys) =>
+        landing.recording(feed, keys, touchedData.columns) },
+      pin = Some(parent.version))
   }
 
   /** Read ONLY the named buckets of a bucketed snapshot — the pruned
@@ -977,13 +897,9 @@ object VersionedTable {
     require(buckets.nonEmpty && buckets.forall(dirs.contains),
       s"buckets ${buckets.mkString(",")} not all in [0, ${c.nBuckets.get})")
     def leaf(b: Int) = s"$root/${dirs(b)}/$BucketCol=$b"
+    buckets.map(dirs).distinct.foreach(d =>
+      requireReadable(fsOps, root, version, s"$root/$d"))
     val paths = buckets.distinct.map(leaf)
-    paths.foreach { p =>
-      val d = p.substring(0, p.lastIndexOf('/'))
-      require(fsOps.exists(d),
-        s"version $version of $root was vacuumed; earliest readable is " +
-          s"${earliestReadable(fsOps, root).getOrElse(-1L)}")
-    }
     val present = paths.filter(fsOps.exists)
     // leaf-dir reads drop the internal bucket_id partition column: the
     // result carries exactly the logical schema
@@ -1007,12 +923,12 @@ object VersionedTable {
     */
   def writeZIndexed(df: DataFrame, fsOps: FsOps, root: String, ts: Long,
       xCol: String, yCol: String, bits: Int, numFiles: Int,
-      op: String = "write", maxAttempts: Int = 5): Long =
-    writeLanded(df, fsOps, root, ts, op, maxAttempts,
+      op: String = "write"): Long =
+    writeLanded(df, fsOps, root, ts, op, Landing(
       Seq("index_col" -> s"$xCol,$yCol", "index_kind" -> "zorder"),
       (d, dir) => graft.operators.Layout.writeZOrderedWithManifest(
         d.sparkSession, d, dir, xCol, yCol, bits, numFiles,
-        s"$dir/$ManifestDir"))
+        s"$dir/$ManifestDir")))
 
   /** Time-travel range read: prune version `version`'s files from its
     * COMMITTED manifest before opening any of them, then apply the exact
@@ -1052,9 +968,7 @@ object VersionedTable {
         s"(committed index: ${c.indexCol.getOrElse("none")}" +
         s"${c.indexKind.fold("")(k => s" [$k]")})")
     val dir = dataDir(root, c)
-    require(fsOps.exists(dir),
-      s"version $version of $root was vacuumed; earliest readable is " +
-        s"${earliestReadable(fsOps, root).getOrElse(-1L)}")
+    requireReadable(fsOps, root, version, dir)
     dir
   }
 
@@ -1070,51 +984,32 @@ object VersionedTable {
   def compact(spark: SparkSession, fsOps: FsOps, root: String, ts: Long,
       numFiles: Int, indexCol: Option[String] = None): Long = {
     // compact is a read-modify-write: pin the commit to the version it
-    // read + 1, so a concurrent ingest landing in between FAILS the
+    // read, so a concurrent ingest landing in between FAILS the
     // compaction (harmless to retry) instead of being silently
     // superseded by the stale pre-compact content — a lost update
     val base = latestVersion(fsOps, root)
     val baseCommit = commitOf(fsOps, root, base)
     val df = readVersion(spark, fsOps, root, base)
-    val (extra, land): (Seq[(String, String)], (DataFrame, String) => Long) =
-      (indexCol, baseCommit.bucketCol) match {
-        case (Some(_), Some(bc)) =>
-          // silently dropping the bucket metadata would kill the fold
-          // loop (bucket-config drift) on the next poll
-          throw new IllegalArgumentException(
-            s"$root is a bucketed chain (bucket_col=$bc); compact " +
-              "preserves the bucket layout — drop index_col (range-" +
-              "sorting and bucket alignment are mutually exclusive " +
-              "layouts)")
-        case (Some(ic), None) => (
-          Seq("index_col" -> ic, "index_kind" -> "range"),
-          (d: DataFrame, dir: String) =>
-            graft.operators.Layout.writeSortedWithManifest(
-              spark, d, dir, ic, numFiles, s"$dir/$ManifestDir"))
-        case (None, Some(bc)) =>
-          // a bucketed chain compacts INTO the same bucket layout (one
-          // fresh dir, all-self map): the chain re-anchors, ancestor
-          // dirs become unreferenced and vacuum can reclaim them, and
-          // later delta commits keep working. Files = buckets here.
-          val n = baseCommit.nBuckets.get
-          (Seq("bucket_col" -> bc, "n_buckets" -> n.toString),
-            observed((d, dir) =>
-              d.withColumn(BucketCol, bucketOf(col(bc), n))
-                .repartition(col(BucketCol))
-                .write.partitionBy(BucketCol).parquet(dir)))
-        case (None, None) =>
-          (Seq.empty,
-            observed((d, dir) => d.coalesce(numFiles).write.parquet(dir)))
-      }
-    try writeLanded(df, fsOps, root, ts, "compact", maxAttempts = 1,
-      extra, land, pin = Some(base + 1))
-    catch {
-      case _: VersionRaceExhausted =>
-        throw new java.util.ConcurrentModificationException(
-          s"$root was committed concurrently during compaction (based " +
-            s"on version $base) — retry the compact against the new " +
-            "latest")
+    val (content, landing) = (indexCol, baseCommit.bucketCol) match {
+      case (Some(_), Some(bc)) =>
+        // silently dropping the bucket metadata would kill the fold
+        // loop (bucket-config drift) on the next poll
+        throw new IllegalArgumentException(
+          s"$root is a bucketed chain (bucket_col=$bc); compact " +
+            "preserves the bucket layout — drop index_col (range-" +
+            "sorting and bucket alignment are mutually exclusive " +
+            "layouts)")
+      case (Some(ic), None) => (df, ranged(ic, numFiles))
+      // a bucketed chain compacts INTO the same bucket layout (one fresh
+      // dir, all-self map): the chain re-anchors, ancestor dirs become
+      // unreferenced and vacuum can reclaim them, and later delta
+      // commits keep working. Files = buckets here.
+      case (None, Some(bc)) =>
+        (df, bucketed(fsOps, bc, baseCommit.nBuckets.get, delta = None))
+      case (None, None) => (df.coalesce(numFiles), Plain)
     }
+    writeLanded(content, fsOps, root, ts, "compact", landing,
+      pin = Some(base))
   }
 
   /** Default retention grace before a superseded version's data may be

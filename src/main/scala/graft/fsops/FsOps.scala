@@ -67,6 +67,68 @@ class FsOps(conf: Configuration) {
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
+  /** Atomic, exclusive publication of one small file (a commit, a
+    * pointer): `content` is written whole into a hidden writer-private
+    * `.….tmp` staging name, then published at `p` only if `p` is
+    * absent. Three outcomes: `true`, the file is visible with this
+    * content; `false`, another writer published `p` first (the race was
+    * lost); a throw, nothing was published. No path leaves a visible
+    * empty or partial file.
+    *
+    * Exclusivity is per scheme. HDFS rename is atomic and refuses an
+    * existing destination. A raw local FS's POSIX rename REPLACES it
+    * (observed: two racing bootstrap polls both cleared the exists-check
+    * and both "won" the same version by clobber), so on `file:` the
+    * staged file is published by HARD LINK creation, which POSIX defines
+    * as atomic fail-if-exists. Local mounts without hard links
+    * (some NFS/SMB/FAT/overlay configs) fall back to exists-check +
+    * rename — racy on raw POSIX but functional.
+    */
+  def publishExclusive(p: String, content: String): Boolean = {
+    val pp = new Path(p)
+    val f = fs(pp)
+    if (!f.exists(pp.getParent)) f.mkdirs(pp.getParent)
+    val tmp = new Path(pp.getParent, "." + pp.getName + "." +
+      java.util.UUID.randomUUID.toString.take(8) + ".tmp")
+    // drop the staging name once it is redundant. Never throws: after a
+    // successful link a throw would report an unpublished commit that
+    // is visible, and a leftover hidden `.tmp` is invisible to readers
+    def tidy(): Unit =
+      try f.delete(tmp, false)
+      catch { case scala.util.control.NonFatal(_) => }
+    def renameIfAbsent(): Boolean = {
+      val renamed = !f.exists(pp) &&
+        (try f.rename(tmp, pp)
+        catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+              _: java.nio.file.FileAlreadyExistsException => false
+        })
+      if (!renamed) tidy()
+      renamed
+    }
+    try {
+      val out = f.create(tmp, false) // private name: never contended
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+      if (f.getScheme != "file") renameIfAbsent()
+      else
+        try {
+          java.nio.file.Files.createLink(
+            java.nio.file.Paths.get(pp.toUri.getPath),
+            java.nio.file.Paths.get(tmp.toUri.getPath))
+          tidy()
+          true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException => tidy(); false
+          case _: UnsupportedOperationException |
+              _: java.nio.file.FileSystemException => renameIfAbsent()
+        }
+    } catch {
+      case e: Throwable =>
+        if (f.exists(tmp)) f.delete(tmp, false)
+        throw e
+    }
+  }
+
   def readFile(p: String): String = {
     val pp = new Path(p)
     val in = fs(pp).open(pp)

@@ -155,7 +155,7 @@ object SamplingGates extends GateSupport {
         .select(col("id_a"), col("id_b"))
       Dedup.leakageSafeSplit(docs.select(col("doc_id"), col("lang")),
         "doc_id", pairs,
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)).frame
     }),
 
     // mixing: UniMax waterfill allocation report (Chung et al. 2023) —

@@ -931,16 +931,17 @@ object Dedup {
     * Scale shape: the component loop is bounded by the PAIR graph
     * (tiny next to the corpus); the corpus is touched by one left
     * broadcast-or-shuffle join against the component labels and a
-    * narrow hash filter. Output: `docs` columns + `split`.
+    * narrow hash filter. Output: `docs` columns + `split`, held with
+    * the cached component labels it reads.
     */
   def leakageSafeSplit(docs: DataFrame, idCol: String, pairs: DataFrame,
-      splits: Seq[(String, Double)], maxIter: Int = 20): DataFrame = {
-    val comps = connectedComponents(pairs, maxIter)
+      splits: Seq[(String, Double)], maxIter: Int = 20): Held = {
+    val comps = components(pairs, maxIter, failOnNonConvergence = true)
     val keyed = docs
-      .join(comps, docs(idCol) === comps("id"), "left")
+      .join(comps.frame, docs(idCol) === comps.frame("id"), "left")
       .withColumn("__skey", coalesce(col("component"), docs(idCol)))
       .drop("id", "component")
-    Sampling.hashSplit(keyed, "__skey", splits).drop("__skey")
+    Held(Sampling.hashSplit(keyed, "__skey", splits).drop("__skey"), comps)
   }
 
   /** [[keepPerComponent]] with a QUALITY keep policy: the survivor of

@@ -119,7 +119,7 @@ object VectorIndexMaintenance {
       val json = s"""{"path": "$name", """ +
         s""""trained_version": $trainedVersion, "dim": $dim, """ +
         s""""m": $m, "ks": $ks, "centroids": $centroids}"""
-      if (!VersionedTable.publishExclusive(fsOps, trainPtr(root), json))
+      if (!fsOps.publishExclusive(trainPtr(root), json))
         fsOps.deleteAll(stage) // lost the pointer race: winner's set rules
       trainMeta(fsOps, root).get
     }

@@ -12,7 +12,10 @@ import scala.jdk.CollectionConverters._
   *    never on the caller's session;
   *  - frames are pinned and released only through `graft.core.Pin`, so
   *    every release frees what its pin took and no caller-owned cache is
-  *    evicted.
+  *    evicted;
+  *  - files are published (hard-linked or renamed into place) only
+  *    through `FsOps`, so a fault-injecting `FsOps` reaches every
+  *    publication.
   */
 class ConfHygieneSpec extends AnyFunSuite with Matchers {
   private val rules = Seq(
@@ -21,7 +24,9 @@ class ConfHygieneSpec extends AnyFunSuite with Matchers {
     ("src/main/scala pins and releases frames only in core/Pin.scala",
       Seq(".persist(", "unpersist(", ".cache()", "localCheckpoint(",
         "LogicalRDD"),
-      Set("graft/core/Pin.scala")))
+      Set("graft/core/Pin.scala")),
+    ("src/main/scala links and renames files only in fsops/FsOps.scala",
+      Seq("createLink(", ".rename("), Set("graft/fsops/FsOps.scala")))
 
   private lazy val sources: Seq[Path] = {
     val root = Paths.get("src/main/scala")

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import graft.SparkSpec
-import graft.fsops.FsOps
+import graft.fsops.{FailingFsOps, FsOps}
 import org.apache.spark.sql.functions._
 import scala.collection.parallel.CollectionConverters._
 
@@ -824,5 +824,117 @@ class VersionedTableSpec extends SparkSpec {
         .count()
     }
     assert(e.getMessage.contains("vacuumed"))
+  }
+
+  private def dataDirs(root: String): Set[String] =
+    fs.ls(root).filter(_.startsWith("d-")).toSet
+
+  /** One-shot fault on the first commit published under `root`. */
+  private def failingCommitAt(root: String)(fault: String => Unit) =
+    new FailingFsOps(spark.sparkContext.hadoopConfiguration,
+      _.startsWith(s"$root/_commits/"))(fault)
+
+  /** An FsOps under which the first commit to `root` loses its race: a
+    * racing writer first publishes a copy of the parent commit (op
+    * "racer") at the contested version, so it lands no data dir of its
+    * own.
+    */
+  private def racedAt(root: String) = failingCommitAt(root) { dest =>
+    val v = dest.split('/').last.stripSuffix(".json").toLong
+    val parent = fs.readFile(f"$root/_commits/${v - 1}%05d.json")
+    assert(fs.publishExclusive(dest, parent
+      .replaceFirst("\"version\": \\d+", s"\"version\": $v")
+      .replaceFirst("\"op\": \"[^\"]*\"", "\"op\": \"racer\"")))
+  }
+
+  /** `run`, under [[racedAt]], loses its race: the racer's commit is
+    * the only new version, and the loser's landing dir is gone.
+    */
+  private def losesRace(root: String)(run: FsOps => Unit): Unit = {
+    val v = VersionedTable.latestVersion(fs, root)
+    val dirs = dataDirs(root)
+    run(racedAt(root))
+    VersionedTable.commits(fs, root).drop(v.toInt).map(c =>
+      c.version -> c.op) shouldBe Seq((v + 1) -> "racer")
+    dataDirs(root) shouldBe dirs
+  }
+
+  /** A write face that must fail its lost race as a conflict. */
+  private def conflicts(face: FsOps => Any): FsOps => Unit =
+    f => intercept[java.util.ConcurrentModificationException](face(f))
+
+  test("a commit whose publication throws stays invisible: the table " +
+      "keeps its version, the landing dir is deleted, and the next " +
+      "write commits") {
+    val root = tmp("vt_f")
+    VersionedTable.write(df((1L, "a", 1L)), fs, root, ts = 100L)
+    val dirs = dataDirs(root)
+    val failing = failingCommitAt(root)(dest =>
+      throw new java.io.IOException(s"injected failure at $dest"))
+    intercept[java.io.IOException] {
+      VersionedTable.write(df((2L, "b", 2L)), failing, root, ts = 200L)
+    }
+    VersionedTable.latestVersion(fs, root) shouldBe 1L
+    dataDirs(root) shouldBe dirs
+    VersionedTable.write(df((2L, "b", 2L)), failing, root,
+      ts = 300L) shouldBe 2L
+    assertSameRows(VersionedTable.readLatest(spark, fs, root),
+      df((2L, "b", 2L)))
+  }
+
+  test("every pinned face on a plain table loses a race to a commit " +
+      "published at its contested version") {
+    val root = tmp("vt_r")
+    VersionedTable.write(df((1L, "a", 1L), (2L, "b", 2L)), fs, root,
+      ts = 100L)
+    losesRace(root)(conflicts(VersionedTable.writeIf(df((1L, "a", 9L)), _,
+      root, ts = 200L, expectedVersion = 1L)))
+    losesRace(root)(conflicts(VersionedTable.merge(spark, _, root,
+      df((1L, "a", 9L)), Seq(2L).toDF("id"), Seq("id"), ts = 300L)))
+    losesRace(root)(conflicts(VersionedTable.compact(spark, _, root,
+      ts = 400L, numFiles = 1)))
+    // the racers republished version 1's snapshot each time
+    assertSameRows(VersionedTable.readLatest(spark, fs, root),
+      df((1L, "a", 1L), (2L, "b", 2L)))
+  }
+
+  test("every pinned face on a bucketed chain loses a race to a commit " +
+      "published at its contested version") {
+    val root = tmp("vt_rb")
+    val n = 4
+    val v1 = df((1L to 20L).map(i => (i, s"n$i", i)): _*)
+    VersionedTable.writeBucketed(v1, fs, root, ts = 100L,
+      bucketBy = "id", nBuckets = n)
+    losesRace(root)(conflicts(VersionedTable.merge(spark, _, root,
+      df((5L, "upd", 99L)), Seq(7L).toDF("id"), Seq("id"), ts = 200L)))
+    val t1 = bucketIdOf(1L, n)
+    val content = df((1L to 20L).filter(i => bucketIdOf(i, n) == t1)
+      .map(i => (i, s"n$i", i + 100)): _*)
+    losesRace(root)(conflicts(VersionedTable.writeBucketedDelta(spark, _,
+      root, ts = 300L, content, Seq(t1),
+      expectedParentVersion = Some(2L))))
+    losesRace(root)(conflicts(VersionedTable.compact(spark, _, root,
+      ts = 400L, numFiles = 1)))
+    assertSameRows(VersionedTable.readLatest(spark, fs, root), v1)
+  }
+
+  test("LogFold.catchUp and catchUpBucketed stop without folding when " +
+      "a racer takes the derived version") {
+    val base = tmp("vt_lb")
+    VersionedTable.write(df((1L, "a", 1L)), fs, base, ts = 100L)
+    val plain = tmp("vt_lp")
+    val bucketedRoot = tmp("vt_lk")
+    def catchUp(f: FsOps) = LogFold.catchUp(spark, f, base, plain, "t") {
+      (_, c) => VersionedTable.readVersion(spark, fs, base, c.version) }
+    // this fold always re-anchors: every commit is a pinned FULL write
+    def catchUpBucketed(f: FsOps) = LogFold.catchUpBucketed(spark, f,
+        base, bucketedRoot, "t", "id", 4) {
+      (_, c) => LogFold.Full(
+        VersionedTable.readVersion(spark, fs, base, c.version)) }
+    catchUp(fs) shouldBe Seq(1L)
+    catchUpBucketed(fs) shouldBe Seq(1L)
+    VersionedTable.write(df((2L, "b", 2L)), fs, base, ts = 200L)
+    losesRace(plain)(f => catchUp(f) shouldBe empty)
+    losesRace(bucketedRoot)(f => catchUpBucketed(f) shouldBe empty)
   }
 }

@@ -1213,12 +1213,24 @@ class Round9ParamsSpec extends SparkSpec {
          | "alpha": 0.5}""".stripMargin)
     spark.read.parquet(s"$base/ts").count() should be >= 1L
 
+    // doc 4 near-duplicates doc 1, so the run labels one component; it
+    // releases the labels it cached (id SETS, not counts — see the
+    // SequencePacking release check) and splits the pair together
+    docs.union(Seq((4L, "alpha beta gamma", "web", 40.0))
+        .toDF("doc_id", "text", "source", "score"))
+      .write.parquet(s"$base/lsdocs")
+    val beforeSplit = spark.sparkContext.getPersistentRDDs.keySet
     run(base, "LeakageSafeSplit",
-      s"""{"source_dir": "$base/docs", "target_dir": "$base/ls",
+      s"""{"source_dir": "$base/lsdocs", "target_dir": "$base/ls",
          | "id_column": "doc_id", "text_column": "text",
          | "splits": [{"name": "train", "weight": 0.5},
          |            {"name": "val", "weight": 0.5}]}""".stripMargin)
-    spark.read.parquet(s"$base/ls").columns should contain ("split")
+    (spark.sparkContext.getPersistentRDDs.keySet -- beforeSplit) shouldBe
+      empty
+    val ls = spark.read.parquet(s"$base/ls")
+    ls.columns should contain ("split")
+    ls.filter($"doc_id".isin(1L, 4L)).select("split").distinct()
+      .count() shouldBe 1L
 
     Seq((1L, 10L), (2L, 11L)).toDF("u", "it")
       .write.parquet(s"$base/pos")

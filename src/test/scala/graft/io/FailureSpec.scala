@@ -1,7 +1,7 @@
 package graft.io
 
 import graft.SparkSpec
-import graft.fsops.FsOps
+import graft.fsops.{FailingFsOps, FsOps}
 
 /** Mid-write failure injection: the write must leave the target exactly as
   * it was (reference behavior: FailFastIntegrationTest — metadata and data
@@ -10,21 +10,10 @@ import graft.fsops.FsOps
 class AtomicWriterFailureSpec extends SparkSpec {
   import spark.implicits._
 
-  /** FsOps that throws on the FIRST move whose destination matches —
-    * one-shot, so the subsequent rollback moves succeed (a persistent FS
-    * outage would defeat any restore logic).
-    */
-  private class FailingFsOps(failOnDest: String)
-      extends FsOps(spark.sparkContext.hadoopConfiguration) {
-    private var fired = false
-    override def move(src: String, dest: String): Unit = {
-      if (!fired && dest.contains(failOnDest)) {
-        fired = true
-        throw new java.io.IOException(s"injected failure moving to $dest")
-      }
-      super.move(src, dest)
-    }
-  }
+  /** Throws on the FIRST move whose destination contains `dest`. */
+  private def failingAt(dest: String) =
+    new FailingFsOps(spark.sparkContext.hadoopConfiguration,
+      _.contains(dest))()
 
   private def readTarget(dir: String) =
     spark.read.option("basePath", dir).parquet(dir)
@@ -37,7 +26,7 @@ class AtomicWriterFailureSpec extends SparkSpec {
     good.write(Seq((1, "p1"), (5, "p2")).toDF("v", "p"), DataFormat.Parquet,
       dir, LoadMode.OverwritePartitions)
     // fail when installing the new p=p2 partition dir (p=p1 already swapped)
-    val failing = new AtomicWriter(new FailingFsOps(s"$dir/p=p2"),
+    val failing = new AtomicWriter(failingAt(s"$dir/p=p2"),
       Seq("p"), None)
     an[Exception] should be thrownBy failing.write(
       Seq((2, "p1"), (99, "p2")).toDF("v", "p"), DataFormat.Parquet,
@@ -54,7 +43,7 @@ class AtomicWriterFailureSpec extends SparkSpec {
       dir, LoadMode.OverwritePartitions)
     // incoming has existing p1 + brand-new p2; fail installing p1 so p2
     // (whatever the install order) must not survive as a partial commit
-    val failing = new AtomicWriter(new FailingFsOps(s"$dir/p=p1"),
+    val failing = new AtomicWriter(failingAt(s"$dir/p=p1"),
       Seq("p"), None)
     an[Exception] should be thrownBy failing.write(
       Seq((2, "p1"), (99, "p2")).toDF("v", "p"), DataFormat.Parquet,
@@ -71,13 +60,8 @@ class AtomicWriterFailureSpec extends SparkSpec {
     // fail only the first move of tmp -> target (dest == exact target dir);
     // the rollback's backup -> target move must then succeed
     val failing = new AtomicWriter(
-      new FsOps(spark.sparkContext.hadoopConfiguration) {
-        private var fired = false
-        override def move(src: String, dest: String): Unit =
-          if (!fired && dest == dir) {
-            fired = true; throw new java.io.IOException("injected")
-          } else super.move(src, dest)
-      }, Seq.empty, Some(1))
+      new FailingFsOps(spark.sparkContext.hadoopConfiguration, _ == dir)(),
+      Seq.empty, Some(1))
     an[Exception] should be thrownBy failing.write(
       Seq((2, "b")).toDF("k", "x"), DataFormat.Parquet, dir,
       LoadMode.OverwriteTable)

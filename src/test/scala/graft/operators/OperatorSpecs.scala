@@ -3101,7 +3101,7 @@ class LeakageSafeSplitSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("id_a", "id_b")
     val out = Dedup.leakageSafeSplit(docs, "doc_id", pairs,
-      Seq("train" -> 0.5, "val" -> 0.5))
+      Seq("train" -> 0.5, "val" -> 0.5)).frame
     val m = out.select($"doc_id", $"split").as[(Long, String)]
       .collect().toMap
     Seq(2L, 3L, 4L, 5L).foreach(m(_) shouldBe m(1L))
