@@ -565,22 +565,28 @@ object Dedup {
     * touched (compose with [[dedupCorpus]] on the increment for that);
     * ids must be unique across both frames (a growing corpus's invariant).
     *
-    * Shape: exact matches go first via a fixed-width digest anti-join
-    * (existing digests are distinct — one row per unique content however
-    * often it repeats); near-dup candidates come from a LANDED-banded ×
-    * BATCH-banded bucket join, so only cross-side pairs ever exist —
-    * the landed corpus's internal near-dup structure is never generated
-    * or re-verified per increment (IncProbe measured it dominating a
-    * union self-join). Both joins are bucketed equi-joins; nothing is
-    * broadcast-sized except the final drop list.
+    * Shape: one pass over the batch drops its exact matches via a
+    * fixed-width digest anti-join (existing digests are distinct — one
+    * row per unique content however often it repeats) and checkpoints
+    * the survivors with their shingle hashes and signatures. Near-dup
+    * candidates come from ONE LANDED-banded × BATCH-banded bucket join,
+    * so only cross-side pairs ever exist — the landed corpus's internal
+    * near-dup structure is never generated or re-verified per increment
+    * (IncProbe measured it dominating a union self-join). Each candidate
+    * pair is verified on its own: the landed text is joined onto the
+    * candidate list by id and shingled per pair. All joins are
+    * equi-joins; none is a product of the batch and the landed corpus.
     *
     * Scale note: with no `artifacts`, signatures and digests for the
     * EXISTING corpus are recomputed per increment (self-contained entry
     * point). At production scale, persist [[dedupArtifacts]] alongside
     * the landed corpus (one (id, digest, k-long signature) row per doc)
-    * and pass it here — the increment's cost then scales with the BATCH:
-    * the existing side contributes a narrow artifact scan, and text is
-    * re-read only for the candidate sliver during exact verification.
+    * and pass it here: the existing side then contributes a narrow
+    * artifact scan instead of a re-signing, and only the candidate pairs'
+    * text is shingled. The landed `(id, text)` is still read whole on
+    * every increment to fetch that candidate sliver (a full scan, and a
+    * shuffle unless the planner broadcasts the candidate side), so an
+    * increment is batch-sized work plus one landed text read.
     */
   def dedupIncrement(existing: DataFrame, incoming: DataFrame, idCol: String,
       textCol: String, threshold: Double = 0.5, shingleSize: Int = 3,
@@ -642,10 +648,11 @@ object Dedup {
         "id_a", k, bands)),
       shingleSize, k, bands)
 
-  /** [[dedupIncrement]] against a prepared, persisted landed side: each
-    * call pays batch-sized work only — the landed contribution is two
-    * cached scans (digests for the prune, banded buckets for the
-    * candidate join) plus the candidate-sliver text read.
+  /** [[dedupIncrement]] against a prepared, persisted landed side: the
+    * landed digests and banded buckets are two cached scans (the digests'
+    * join side built once per call), and the rest of a call is
+    * batch-sized work plus the one read of the landed `(id, text)` that
+    * fetches the candidate pairs' text.
     */
   def dedupIncrementPrepared(existing: DataFrame, incoming: DataFrame,
       idCol: String, textCol: String, prepared: IncrementArtifacts,
@@ -658,69 +665,55 @@ object Dedup {
       idCol: String, textCol: String, threshold: Double, shingleSize: Int,
       k: Int, bands: Int, exDigests: DataFrame,
       exBanded: DataFrame): DataFrame = {
-    // ONE pass over the batch computes everything the increment needs per
-    // row — content digest (exact prune), shingle hashes (verification)
-    // and minhash signature (candidate banding) — materialized once via a
-    // lazy localCheckpoint (batch-sized; the first action pins it, GC
-    // releases the blocks with the plan). The unfused form re-scanned and
-    // re-tokenized the batch for the prune, the signatures, the verify
-    // sliver and the final anti-join, and needed a repartition barrier to
-    // keep CollapseProject from inlining the minhash into the band
-    // generator — the checkpoint IS that barrier. Per micro-batch this
-    // cuts 3 batch re-scans and 3 shuffles (signature repartition, pair-id
-    // distinct, drop-list distinct; anti/semi joins dedup their own right
-    // sides), the q75 jobs-per-trigger driver.
+    // ONE pass over the batch drops its exact dups of the landed corpus
+    // (digest anti-join) and computes what each survivor needs — shingle
+    // hashes (verification) and minhash signature (banding) — held by a
+    // lazy localCheckpoint (batch-sized; the first action fills it, GC
+    // releases the blocks with the plan). Every later branch reads the
+    // checkpoint, so the landed digests' join side is built once per
+    // increment and the checkpoint holds only pruned rows; the checkpoint
+    // is also the barrier that keeps CollapseProject from inlining the
+    // minhash into the band generator.
     val inCols = incoming.columns.toSeq.map(c => col(s"`$c`"))
     val feat = Pin.checkpoint(graft.core.Spread(incoming)
+      .join(exDigests, md5(col(s"`$textCol`")) === col("__d"), "left_anti")
       .withColumn("__graft_toks", tokens(col(s"`$textCol`")))
       .select(inCols ++ Seq(
-        md5(col(s"`$textCol`")).as("__dg"),
         graft.functions.ShingleHashExpr
           .shingleHashes(col("__graft_toks"), shingleSize).as("__sh"),
         graft.functions.ShingleMinHashExpr
           .signature(col("__graft_toks"), shingleSize, k).as("__sig")): _*),
       eager = false).frame
-    val inPruned = feat.join(exDigests, col("__dg") === col("__d"),
-      "left_anti")
     // candidates come from a LANDED-banded × BATCH-banded join, never a
-    // self-join over the union: landed×landed bucket pairs (the landed
-    // corpus's own near-dup structure, re-derivable any time and useless
-    // for an increment) are never generated, let alone verified —
-    // IncProbe measured them dominating the naive union self-join.
-    // Batch×batch pairs are equally out of scope (within-batch dedup is
-    // dedupCorpus's job) and are skipped the same way. Banding only the
-    // PRUNED rows keeps exact dups out of the pair graph, exactly as when
-    // signatures were computed post-prune.
+    // self-join over the union: landed×landed pairs (the landed corpus's
+    // own near-dup structure) and batch×batch pairs (dedupCorpus's job)
+    // are never generated — IncProbe measured the former dominating a
+    // union self-join. Only pruned rows are banded, so exact dups stay
+    // out of the pair graph.
     val inBanded = bandSignatures(
-      inPruned.select(col(s"`$idCol`").as("id"), col("__sig").as("sig")),
+      feat.select(col(s"`$idCol`").as("id"), col("__sig").as("sig")),
       "id_b", k, bands)
-    val cand = exBanded.join(inBanded, Seq("band", "bucket"))
+    // verification runs pair by pair over the one candidate list: each
+    // (landed, incoming) pair fetches the landed text by id and shingles
+    // it, next to the incoming shingle hashes already on the checkpoint.
+    // A landed doc that is a candidate for several incoming docs is
+    // shingled once per pair — candidate-sized work. Same intersect/union
+    // arithmetic as jaccardVerify; the incoming side of a verified pair
+    // is disqualified directly.
+    val bad = exBanded.join(inBanded, Seq("band", "bucket"))
       .select(col("id_a"), col("id_b")).distinct()
-    // exact verification re-reads text ONLY for the candidate sliver, and
-    // only on the LANDED side (id_a) — the batch side's shingle hashes are
-    // already on the checkpoint. At scale the landed corpus is never
-    // re-shingled whole. A left-semi join dedups its right side itself, so
-    // the id list needs no distinct.
-    val shA = shingleHashDF(
-      existing.select(col(s"`$idCol`"), col(s"`$textCol`"))
-        .join(cand.select(col("id_a").as("__pid")),
-          col(s"`$idCol`") === col("__pid"), "left_semi"),
-      idCol, textCol, shingleSize)
-      .select(col("id").as("id_a"), col("sh").as("sh_a"))
-    // every verified pair is (landed, incoming) by construction: the
-    // incoming side is disqualified directly. Same intersect/union
-    // arithmetic as jaccardVerify, over the same per-side shingle hashes.
-    val bad = cand
-      .join(shA, Seq("id_a"))
+      .join(existing.select(col(s"`$idCol`").as("id_a"),
+        col(s"`$textCol`").as("__text_a")), Seq("id_a"))
+      .select(col("id_b"), graft.functions.ShingleHashExpr
+        .shingleHashes(tokens(col("__text_a")), shingleSize).as("sh_a"))
       .join(feat.select(col(s"`$idCol`").as("id_b"), col("__sh").as("sh_b")),
         Seq("id_b"))
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("uni",
         size(col("sh_a")) + size(col("sh_b")) - col("inter"))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("inter").cast("double") / col("uni") >= threshold)
       .select(col("id_b").as(idCol))
-    inPruned.join(bad, Seq(idCol), "left_anti").select(inCols: _*)
+    feat.join(bad, Seq(idCol), "left_anti").select(inCols: _*)
   }
 
   /** The distinct landed digests of [[dedupArtifacts]], PERSISTED for a

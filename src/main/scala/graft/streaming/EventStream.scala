@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.Pin
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -219,10 +219,11 @@ object EventStream {
     * The landed side is PREPARED once for the query's lifetime
     * ([[graft.operators.Dedup.prepareIncrement]]: persisted distinct
     * digests + persisted banded signatures) and released after — so each
-    * micro-batch pays batch-sized work plus two cached landed scans, and
-    * landed TEXT is only read for candidate verification. Unprepared,
-    * every trigger would re-distinct the digests and re-explode the
-    * banding over the whole landed artifact set.
+    * micro-batch pays batch-sized work, two cached landed scans, and one
+    * read of the whole landed `(id, text)` to fetch the text of its
+    * candidate pairs (only those pairs are shingled). Unprepared, every
+    * trigger would re-distinct the digests and re-explode the banding
+    * over the whole landed artifact set.
     */
   def runNearDupIncrementOnce(spark: SparkSession, schema: StructType,
       inputGlob: String, existing: DataFrame, artifacts: DataFrame,
@@ -478,13 +479,14 @@ object EventStream {
     val checks = rules.map(graft.operators.Checks.parseRule)
     require(checks.forall(_.violates.isDefined),
       s"streaming checks must be row-level (batch-decomposable): $rules")
-    drainBatches(files(spark, schema, inputGlob, maxFilesPerTrigger),
-        queryName) { (batch, batchId) =>
+    def report(batch: DataFrame, batchId: Long) =
       graft.operators.Checks.run(batch, checks)
         .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(outDir)
+    drainBatches(files(spark, schema, inputGlob, maxFilesPerTrigger),
+        queryName) { (batch, batchId) =>
+      report(batch, batchId).write.mode("append").parquet(outDir)
     }
-    spark.read.parquet(outDir)
+    appended(spark, outDir, report(emptyBatch(spark, schema), 0L))
   }
 
   /** Watermarked stream-stream INTERVAL join: each left event joins right
@@ -655,7 +657,8 @@ object EventStream {
     * over). Stateless by construction: batch outputs union to exactly
     * the whole-corpus result, which is what lets a q-gate share the
     * batch operator's oracle. The pinned-artifact runners above are this
-    * runner with their own prepare/release around it.
+    * runner with their own prepare/release around it. An empty backlog
+    * returns an empty frame with `fn`'s output columns.
     */
   def runTransformOnce(spark: SparkSession, schema: StructType,
       inputGlob: String, outDir: String, queryName: String,
@@ -665,7 +668,22 @@ object EventStream {
         queryName) { (batch, _) =>
       fn(batch).write.mode("append").parquet(outDir)
     }
-    spark.read.parquet(outDir)
+    appended(spark, outDir, fn(emptyBatch(spark, schema)))
+  }
+
+  private def emptyBatch(spark: SparkSession, schema: StructType) =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** What the per-batch drain appended to `outDir`. An empty backlog runs
+    * no micro-batch and so writes nothing: then the result is an empty
+    * frame with the columns `batchOutput` (one batch's output) carries.
+    */
+  private def appended(spark: SparkSession, outDir: String,
+      batchOutput: => DataFrame): DataFrame = {
+    val out = new org.apache.hadoop.fs.Path(outDir)
+    if (out.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(out))
+      spark.read.parquet(outDir)
+    else emptyBatch(spark, batchOutput.schema)
   }
 
   /** Run [[StatefulSessionize]] as a REAL stateful streaming query:

@@ -208,6 +208,99 @@ class DedupSpec extends SparkSpec {
     } finally prepared.release()
   }
 
+  test("a prepared increment's write runs a pinned number of Spark jobs, " +
+      "reads the batch once and builds the landed digests' join side once") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val dir = tmp("inc_jobs")
+    Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today again"),
+      (2L, "completely unrelated text about spark shuffle partitions here"))
+      .toDF("doc_id", "text").write.parquet(dir + "/landed")
+    Seq(
+      (10L, "the quick brown fox jumps over the lazy dog today again"),
+      (11L, "the quick brown fox jumps over the lazy dog today also"),
+      (12L, "fresh document with entirely new content nothing shared at all"))
+      .toDF("doc_id", "text").coalesce(1).write.parquet(dir + "/batch")
+    val landed = spark.read.parquet(dir + "/landed")
+    val prepared = Dedup.prepareIncrement(
+      Dedup.dedupArtifacts(landed, "doc_id", "text"))
+    try {
+      // a warm trigger: the landed side is already cached
+      prepared.digests.count(); prepared.banded.count()
+      val run = graft.JobCount(spark) {
+        Dedup.dedupIncrementPrepared(landed,
+          spark.read.parquet(dir + "/batch"), "doc_id", "text", prepared)
+          .write.parquet(dir + "/out")
+      }
+      spark.read.parquet(dir + "/out").select($"doc_id").as[Long]
+        .collect() shouldBe Array(12L)
+      val digestExchanges = run.plans.flatMap(graft.JobCount
+        .exchangesOver(_) {
+          case s: InMemoryTableScanExec => s.output.map(_.name) == Seq("__d")
+          case _ => false
+        })
+      // the batch is scanned by one plan node (inside the checkpoint), and
+      // that node's row metric, filled by whichever job ran it, counts the
+      // batch once: no second job recomputed the checkpointed rows
+      val batchScans = run.plans.flatMap(graft.JobCount.nodes).collect {
+        case f: FileSourceScanExec if f.relation.location.rootPaths
+            .exists(_.getName == "batch") => f
+      }
+      run.jobs shouldBe 9
+      digestExchanges should have size 1
+      batchScans.map(_.metrics("numOutputRows").value) shouldBe Seq(3L)
+    } finally prepared.release()
+  }
+
+  test("dedupIncrement verifies pair by pair: a landed doc shared by two " +
+      "incoming docs, an incoming doc colliding with two landed docs of " +
+      "which one passes; every entry point agrees") {
+    val w = ("alpha bravo charlie delta echo foxtrot golf hotel india " +
+      "juliet kilo lima mike november oscar papa quebec romeo sierra " +
+      "tango uniform victor whiskey xray yankee zulu").split(" ").toSeq
+    def doc(ws: Seq[String]) = ws.mkString(" ")
+    val a = doc(w)
+    val x = doc(w.init :+ "zebra") // last word changed: ~0.92 to a
+    val y = doc("aardvark" +: w.tail) // first word changed: ~0.92 to a
+    // x's first three words replaced: ~0.78 to x, below the threshold
+    val b = doc(Seq("one", "two", "three") ++ w.drop(3).init :+ "zebra")
+    val z = doc(Seq("one", "two", "three") ++ w.drop(3).dropRight(4) ++
+      Seq("six", "seven", "eight", "nine"))
+    val landed = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
+    val incoming = Seq(
+      (10L, x), (11L, y), (12L, z),
+      (13L, "fresh words that share nothing with the landed corpus"),
+      (14L, b)) // exact dup of landed 2: pruned
+      .toDF("doc_id", "text")
+    // the shape under test, checked on the candidates themselves: landed
+    // 1 is a candidate of incoming 10 and 11, and incoming 10 collides
+    // with landed 1 (passes) and landed 2 (fails)
+    val both = landed.union(incoming)
+    val pairs = Dedup.jaccardVerify(
+      Dedup.minhashCandidates(both, "doc_id", "text"), both, "doc_id", "text")
+      .as[(Long, Long, Double)].collect()
+      .map { case (i, j, s) => (i, j) -> s }.toMap
+    val threshold = 0.8
+    pairs((1L, 10L)) should be >= threshold
+    pairs((1L, 11L)) should be >= threshold
+    pairs((2L, 10L)) should be < threshold
+    pairs((2L, 12L)) should be < threshold
+    val self = Dedup.dedupIncrement(landed, incoming, "doc_id", "text",
+      threshold = threshold)
+    val ids = self.select($"doc_id").as[Long].collect()
+    ids.sorted shouldBe Array(12L, 13L)
+    ids.distinct.length shouldBe ids.length
+    self.columns.toSeq shouldBe incoming.columns.toSeq
+    val arts = Dedup.dedupArtifacts(landed, "doc_id", "text")
+    assertSameRows(Dedup.dedupIncrement(landed, incoming, "doc_id", "text",
+      threshold = threshold, artifacts = Some(arts)), self)
+    val prepared = Dedup.prepareIncrement(arts)
+    try assertSameRows(Dedup.dedupIncrementPrepared(landed, incoming,
+      "doc_id", "text", prepared, threshold = threshold), self)
+    finally prepared.release()
+  }
+
   test("connected components: chains collapse to min id, isolated pairs " +
       "stay separate, long paths converge") {
     val pairs = Seq(

@@ -236,6 +236,35 @@ class EventStreamSpec extends SparkSpec {
       Array(13L, 14L)
   }
 
+  test("an empty backlog runs no micro-batch and returns 0 rows with the " +
+      "columns of a one-file run") {
+    import graft.operators.Dedup
+    val dir = tmp("stream_empty")
+    val landed = Seq((1L, "alpha beta gamma delta epsilon zeta"))
+      .toDF("doc_id", "text")
+    val incoming = Seq((10L, "fresh never seen material entirely new"))
+      .toDF("doc_id", "text")
+    incoming.coalesce(1).write.parquet(dir + "/one")
+    new java.io.File(dir + "/none").mkdirs()
+    val arts = Dedup.dedupArtifacts(landed, "doc_id", "text")
+    def nearDup(in: String) = EventStream.runNearDupIncrementOnce(spark,
+      incoming.schema, dir + "/" + in, landed, arts, "doc_id", "text",
+      threshold = 0.5, dir + "/neardup_" + in, "empty_neardup")
+    val checks = Seq(1L, 2L).toDF("id")
+    checks.coalesce(1).write.parquet(dir + "/checks_one")
+    new java.io.File(dir + "/checks_none").mkdirs()
+    def quality(in: String) = EventStream.runQualityChecksOnce(spark,
+      checks.schema, dir + "/" + in, Seq("not_null:id"),
+      dir + "/qc_" + in, "empty_qc")
+    Seq((nearDup("one"), nearDup("none")),
+        (quality("checks_one"), quality("checks_none"))).foreach {
+      case (one, none) =>
+        one.count() should be > 0L
+        none.count() shouldBe 0L
+        none.dtypes.toSeq shouldBe one.dtypes.toSeq
+    }
+  }
+
   test("append-mode windowed counts emit exactly the watermark-closed " +
       "windows; trendingPerWindow ranks the settled histogram") {
     val dir = tmp("stream_windowed")
