@@ -4,9 +4,11 @@ import graft.core.Algorithm
 import graft.fsops.FsOps
 import graft.io.{AtomicWriter, DataFormat, LoadMode}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** Append load: incrementally land new files into a partitioned target,
   * deriving partition values from the FILE NAME/PATH via configured regexes,
@@ -54,19 +56,32 @@ class AppendLoad(val spark: SparkSession, fsOps: FsOps, p: AppendLoadParams)
 
   private def partitionType(name: String): DataType =
     p.targetSchema.fields.find(_.name == name).map(_.dataType)
-      .getOrElse(org.apache.spark.sql.types.StringType)
+      .getOrElse(StringType)
 
   private def dataSchema: StructType =
     StructType(p.targetSchema.fields.filterNot(f =>
       p.targetPartitions.contains(f.name)))
 
-  private def headerPathFor(file: String): String = {
-    val partVals = p.targetPartitions.zip(p.partitionRegexes).map {
-      case (c, re) => c + "=" + re.r.findFirstMatchIn(file)
+  /** The partition dir `file` lands in, named as Spark names it: each
+    * regex capture cast to its column's type (as [[transform]] casts it),
+    * then rendered back to a string — evaluated on the driver, no job.
+    * `year=2024/month=6` for `sales_2024_06.psv` with an integer month.
+    */
+  private def partitionDirOf(file: String): String = {
+    val conf = spark.sessionState.conf
+    val tz = Some(conf.sessionLocalTimeZone)
+    p.targetPartitions.zip(p.partitionRegexes).map { case (c, re) =>
+      val raw = re.r.findFirstMatchIn(file)
         .map(m => if (m.groupCount >= 1) m.group(1) else m.matched).getOrElse("")
+      val typed = Cast(Literal(raw), partitionType(c), tz,
+        EvalMode.fromSQLConf(conf))
+      ExternalCatalogUtils.getPartitionPathString(c,
+        Option(Cast(typed, StringType, tz).eval()).map(_.toString).orNull)
     }.mkString("/")
-    s"${p.headerDir}/$partVals/header.json"
   }
+
+  private def headerPath(partitionDir: String): String =
+    s"${p.headerDir}/$partitionDir/header.json"
 
   /** Schema for a header group: the pinned header file when the partition
     * was loaded before; otherwise the target schema minus partition columns,
@@ -92,7 +107,7 @@ class AppendLoad(val spark: SparkSession, fsOps: FsOps, p: AppendLoadParams)
       f.endsWith("_SUCCESS") || Iterator.iterate(new Path(f))(_.getParent)
         .takeWhile(_.depth() > sourceDepth).exists(_.getName.startsWith("."))
     }
-    val byHeader = files.groupBy(headerPathFor)
+    val byHeader = files.groupBy(f => headerPath(partitionDirOf(f)))
     val withSchemas = byHeader.toSeq.map { case (hp, group) =>
       (schemaForGroup(hp, group), group)
     }
@@ -138,23 +153,18 @@ class AppendLoad(val spark: SparkSession, fsOps: FsOps, p: AppendLoadParams)
   override def write(dfs: Vector[DataFrame]): Vector[DataFrame] = {
     val writer = new AtomicWriter(fsOps, p.targetPartitions, None)
     dfs.foreach { df =>
-      writer.write(df, DataFormat.Parquet, p.targetDir, p.writeLoadMode)
-      writeHeaders(df)
+      val installed =
+        writer.write(df, DataFormat.Parquet, p.targetDir, p.writeLoadMode)
+      writeHeaders(df, installed)
     }
     dfs
   }
 
-  /** Persist header.json per affected partition (reference: AppendLoad.scala:267-288). */
-  private def writeHeaders(df: DataFrame): Unit = {
+  /** Persist header.json per installed partition (reference: AppendLoad.scala:267-288). */
+  private def writeHeaders(df: DataFrame, installed: Seq[String]): Unit = {
     val dataJson = StructType(df.schema.fields.filterNot(f =>
       p.targetPartitions.contains(f.name))).prettyJson
-    val parts = df.select(p.targetPartitions.map(col): _*).distinct()
-      .collect()
-    parts.foreach { r =>
-      val dir = p.targetPartitions.zipWithIndex
-        .map { case (c, i) => s"$c=${r.get(i)}" }.mkString("/")
-      val path = s"${p.headerDir}/$dir/header.json"
-      if (!fsOps.exists(path)) fsOps.writeFile(path, dataJson)
-    }
+    installed.map(headerPath).filterNot(fsOps.exists)
+      .foreach(fsOps.writeFile(_, dataJson))
   }
 }

@@ -1,10 +1,10 @@
 package graft.algos
 
+import graft.catalog.CatalogOps
 import graft.fsops.FsOps
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.CompressionCodecFactory
-import java.util.concurrent.{Executors, TimeUnit}
 import java.util.zip.ZipInputStream
 
 /** Decompress .gz / single-entry .zip files in a landing directory and
@@ -14,50 +14,43 @@ import java.util.zip.ZipInputStream
   * Spark's executors are deliberately not involved.
   */
 class GzipDecompressor(conf: Configuration, fsOps: FsOps,
-    threadPoolSize: Int = 8, timeoutHours: Int = 4) {
+    threadPoolSize: Int = 8) {
 
+  /** Inflate every archive under `dir` on the shared bounded pool
+    * ([[CatalogOps.runConcurrently]]): it waits for every archive, reports
+    * every failure (a corrupt archive must not read as a successful load)
+    * and interrupts what still runs at its timeout.
+    */
   def run(dir: String): Seq[String] = {
     val codecs = new CompressionCodecFactory(conf)
     val archives = fsOps.listFilesRecursive(dir)
       .filter(f => f.endsWith(".gz") || f.endsWith(".zip"))
-    val pool = Executors.newFixedThreadPool(threadPoolSize)
-    val results = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val futures = archives.map { f =>
-      pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = {
-          val src = new Path(f)
-          val fs = fsOps.fs(src)
-          val outPath = new Path(stripExtension(f))
-          val out = fs.create(outPath, true)
-          val in =
-            if (f.endsWith(".zip")) {
-              val z = new ZipInputStream(fs.open(src))
-              z.getNextEntry // single-entry zip, reference :63-72
-              z
-            } else codecs.getCodec(src).createInputStream(fs.open(src))
-          var outClosed = false
-          try in.transferTo(out)
-          catch {
-            case e: Throwable =>
-              // never leave a truncated output behind a successful-looking run
-              out.close(); outClosed = true
-              fs.delete(outPath, false)
-              throw e
-          }
-          finally { in.close(); if (!outClosed) out.close() }
-          fs.delete(src, false)
-          results.add(outPath.toString)
-        }
-      })
+    CatalogOps.runConcurrently(archives, threadPoolSize)(inflate(codecs, _))
+    archives.map(stripExtension).sorted
+  }
+
+  private def inflate(codecs: CompressionCodecFactory, f: String): Unit = {
+    val src = new Path(f)
+    val fs = fsOps.fs(src)
+    val outPath = new Path(stripExtension(f))
+    val out = fs.create(outPath, true)
+    val in =
+      if (f.endsWith(".zip")) {
+        val z = new ZipInputStream(fs.open(src))
+        z.getNextEntry // single-entry zip, reference :63-72
+        z
+      } else codecs.getCodec(src).createInputStream(fs.open(src))
+    var outClosed = false
+    try in.transferTo(out)
+    catch {
+      case e: Throwable =>
+        // never leave a truncated output behind a successful-looking run
+        out.close(); outClosed = true
+        fs.delete(outPath, false)
+        throw e
     }
-    pool.shutdown()
-    if (!pool.awaitTermination(timeoutHours, TimeUnit.HOURS))
-      throw new RuntimeException("gzip decompression timed out")
-    // surface worker failures — an uninspected Future swallows them and a
-    // corrupt archive would read as a successful load
-    futures.foreach(_.get())
-    scala.jdk.CollectionConverters.IteratorHasAsScala(results.iterator())
-      .asScala.toSeq.sorted
+    finally { in.close(); if (!outClosed) out.close() }
+    fs.delete(src, false)
   }
 
   private def stripExtension(f: String): String =

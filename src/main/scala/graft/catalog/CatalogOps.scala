@@ -1,5 +1,6 @@
 package graft.catalog
 
+import graft.io.AtomicWriter
 import org.apache.spark.sql.SparkSession
 
 import scala.concurrent.duration.{Duration, DurationInt, FiniteDuration}
@@ -94,17 +95,18 @@ object CatalogOps {
     * finish (so no rewrite is abandoned mid-flight), then rethrowing the
     * first failure with the rest attached as suppressed (a multi-partition
     * compaction failing in several partitions reports every error, not
-    * just one). Spark job submission is thread-safe; per-item work here
-    * is an independent small job plus per-directory FS renames, so
-    * concurrency is bounded only to keep the scheduler from flooding.
+    * just one). Spark job submission is thread-safe; per-item work (a
+    * partition rewrite, an ANALYZE, one archive's decompression) is
+    * independent, so concurrency is bounded only to keep the scheduler and
+    * the FileSystem from flooding.
     *
     * The wait is BOUNDED (`timeout`, shared across all items — reference
     * precedent: its decompression pool awaits at most 4 h,
-    * algo/GzipDecompressor.scala:86): one hung FS rename must not stall a
-    * compaction run forever. On timeout the thrown TimeoutException names
+    * algo/GzipDecompressor.scala:86): one hung rewrite or copy must not
+    * stall a run forever. On timeout the thrown TimeoutException names
     * the stuck item and in-flight threads are interrupted.
     */
-  private[catalog] def runConcurrently[A](items: Seq[A], maxConcurrent: Int,
+  private[graft] def runConcurrently[A](items: Seq[A], maxConcurrent: Int,
       timeout: FiniteDuration = 4.hours)(f: A => Unit): Unit =
     if (items.size <= 1 || maxConcurrent <= 1) items.foreach(f)
     else {
@@ -136,36 +138,28 @@ object CatalogOps {
   /** Compact the given partitions to a controlled file count — the native
     * equivalent of the reference's Delta compaction (reference:
     * algo/loads/DeltaLakeLoad.scala:309-352: rewrite affected partitions
-    * with dataChange=false). Each partition dir is rewritten through a
-    * temp dir + atomic rename; content is unchanged.
+    * with dataChange=false); content is unchanged.
     *
-    * Partitions are rewritten CONCURRENTLY (bounded by `maxConcurrent`):
-    * each rewrite is one small Spark job plus renames confined to its own
-    * partition directory, so a full-table compaction over thousands of
-    * partitions is wall-clock-bounded by the largest partition, not the
-    * sum of thousands of serial driver round-trips.
+    * Partitions are rewritten CONCURRENTLY (bounded by
+    * `maxConcurrent`): each rewrite is one small Spark job landing under
+    * one temp tree beside the table root, so a full-table compaction over
+    * thousands of partitions is wall-clock-bounded by the largest
+    * partition. One [[graft.io.AtomicWriter.install]] then swaps them all
+    * in: the install is all-or-nothing across the given partitions, not
+    * per partition, and a reader never sees a staging dir as a partition.
     */
   def compactPartitions(spark: SparkSession, fsOps: graft.fsops.FsOps,
       tableDir: String, partitionDirs: Seq[String],
       filesPerPartition: Int, maxConcurrent: Int = 8,
-      timeout: FiniteDuration = 4.hours): Unit =
-    runConcurrently(partitionDirs, maxConcurrent, timeout) { p =>
-      val dir = s"$tableDir/$p"
-      val tmp = fsOps.timestampedDir(dir + "_compact")
-      spark.read.parquet(dir).repartition(filesPerPartition)
-        .write.parquet(tmp)
-      val backup = fsOps.timestampedDir(dir + "_pre")
-      fsOps.move(dir, backup)
-      try {
-        fsOps.move(tmp, dir)
-        fsOps.deleteAll(backup)
-      } catch {
-        case e: Throwable =>
-          if (!fsOps.exists(dir)) fsOps.move(backup, dir)
-          fsOps.deleteAll(tmp)
-          throw e
-      }
-    }
+      timeout: FiniteDuration = 4.hours): Unit = {
+    val tmp = fsOps.timestampedDir(tableDir + "_compact")
+    AtomicWriter.land(fsOps, tmp)(
+      runConcurrently(partitionDirs, maxConcurrent, timeout) { p =>
+        spark.read.parquet(s"$tableDir/$p").repartition(filesPerPartition)
+          .write.parquet(s"$tmp/$p")
+      })
+    AtomicWriter.install(fsOps, tmp, tableDir, partitionDirs, Nil)
+  }
 
   /** ANALYZE statistics, whole-table and optionally per partition
     * (reference: TableStatistics.scala:22-123). Feeds Spark CBO.

@@ -4,16 +4,14 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
-import scala.collection.parallel.CollectionConverters._
 
 /** Hadoop FileSystem choreography: the reference concentrates its
   * transactional value in driver-side FS moves
   * (reference: src/main/scala/com/adidas/analytics/util/HadoopLoadHelper.scala,
-  * util/DFSWrapper.scala). This is the equivalent surface: list, move-all,
-  * backup/restore of partition directories, timestamped dir naming,
-  * ordered-version retention. Moves of sibling dirs are parallelized on the
-  * driver (renames are O(1) metadata ops on HDFS/posix; the parallelism is
-  * for many-partition loads where serial RPC latency dominates).
+  * util/DFSWrapper.scala). This is the equivalent surface: list, move,
+  * delete, exclusive publication of small files and timestamped dir
+  * naming. The backup/install/restore choreography built on `move` lives
+  * in one place, `graft.io.AtomicWriter.install`.
   */
 class FsOps(conf: Configuration) {
 
@@ -55,11 +53,6 @@ class FsOps(conf: Configuration) {
     if (!f.rename(s, d))
       throw new java.io.IOException(s"rename failed: $src -> $dest")
   }
-
-  /** Move every named child from srcRoot to destRoot, in parallel. */
-  def moveChildren(children: Seq[String], srcRoot: String,
-      destRoot: String): Unit =
-    children.par.foreach(c => move(s"$srcRoot/$c", s"$destRoot/$c"))
 
   def writeFile(p: String, content: String): Unit = {
     val pp = new Path(p)
@@ -141,12 +134,4 @@ class FsOps(conf: Configuration) {
   def timestampedDir(base: String): String =
     base + "_" + ZonedDateTime.now(ZoneOffset.UTC)
       .format(DateTimeFormatter.ofPattern("yyyyMMddHHmmssSSS"))
-
-  /** Keep the newest `retain` ordered version dirs matching `prefix_`,
-    * delete the rest (reference: HadoopLoadHelper.scala:99-117).
-    */
-  def cleanupOldVersions(parent: String, prefix: String, retain: Int): Unit = {
-    val versions = ls(parent).filter(_.startsWith(prefix + "_")).sorted
-    versions.dropRight(retain).foreach(v => deleteAll(s"$parent/$v"))
-  }
 }

@@ -5,6 +5,8 @@ import graft.fsops.FsOps
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 
+import scala.util.control.NonFatal
+
 /** Transactional partitioned writes: write to a temp dir, back up the
   * affected partition dirs, move the new ones in, restore the backup on any
   * failure. This is the reference's core product semantics
@@ -14,11 +16,18 @@ import org.apache.spark.sql.functions.col
   * backup/merge/restore across an existing table, so this choreography is
   * re-implemented (not copied) on the Hadoop FileSystem API.
   *
+  * Every directory swap in graft — both write modes here and
+  * [[graft.catalog.CatalogOps.compactPartitions]] — goes through one
+  * routine, [[AtomicWriter.install]], with ONE commit point: its last
+  * move. A write that throws has changed nothing; once that move is done
+  * the write has happened, and leftover temp or backup trees (always
+  * siblings of the target, never inside it) are only untidiness. So a
+  * failed append-mode load can be re-run without duplicating rows.
+  *
   * Scale notes: the data path is a single `df.write.partitionBy(...)` — fully
   * distributed, no driver materialization. Driver work is O(#affected
-  * partitions) metadata renames, parallelized. Affected-partition discovery
-  * is a `select(partitions).distinct` — a map-side-combined shuffle of the
-  * partition columns only.
+  * partitions) metadata renames. The affected partitions are the dirs the
+  * temp write produced, listed — no extra Spark job.
   */
 class AtomicWriter(fsOps: FsOps, targetPartitions: Seq[String] = Seq.empty,
     outputFilesNum: Option[Int] = None) {
@@ -55,7 +64,8 @@ class AtomicWriter(fsOps: FsOps, targetPartitions: Seq[String] = Seq.empty,
     walk("", targetPartitions.size)
   }
 
-  /** Atomically install `df` into `targetDir` under the given load mode.
+  /** Atomically install `df` into `targetDir` under the given load mode,
+    * and return the partition dirs it installed (none for OverwriteTable).
     *
     * `alsoReplace`: partition dir names (e.g. `p=p1`) that must be treated
     * as affected even when the incoming data has NO rows for them — a CDC
@@ -64,106 +74,114 @@ class AtomicWriter(fsOps: FsOps, targetPartitions: Seq[String] = Seq.empty,
     * dir. Without it, deletion-only partitions silently survive.
     */
   def write(df: DataFrame, format: DataFormat, targetDir: String,
-      mode: LoadMode, alsoReplace: Seq[String] = Seq.empty): Unit =
-    mode match {
-      case LoadMode.OverwriteTable => overwriteTable(df, format, targetDir)
-      case _ => mergePartitions(df, format, targetDir, mode, alsoReplace)
-    }
-
-  /** Whole-table overwrite with rollback: new content lands in a temp
-    * sibling; old content is backed up before the swap and restored on
-    * failure (reference: OutputWriter.scala:112-123 + FullLoad.scala:47-76).
-    */
-  private def overwriteTable(df: DataFrame, format: DataFormat,
-      targetDir: String): Unit = {
+      mode: LoadMode, alsoReplace: Seq[String] = Seq.empty): Seq[String] = {
+    val whole = mode == LoadMode.OverwriteTable
+    require(whole || targetPartitions.nonEmpty,
+      s"$mode requires target partitions")
     val tmp = fsOps.timestampedDir(targetDir + "_tmp")
-    val backup = fsOps.timestampedDir(targetDir + "_backup")
-    try writeTo(df, format, tmp) catch {
-      case e: Throwable => fsOps.deleteAll(tmp); throw e
-    }
-    val hadOld = fsOps.exists(targetDir)
-    if (hadOld) fsOps.move(targetDir, backup)
-    try {
-      fsOps.move(tmp, targetDir)
-      if (hadOld) fsOps.deleteAll(backup)
-    } catch {
-      case e: Throwable =>
-        if (hadOld && !fsOps.exists(targetDir)) fsOps.move(backup, targetDir)
-        fsOps.deleteAll(tmp)
-        throw e
-    }
+    AtomicWriter.land(fsOps, tmp)(writeTo(
+      if (whole) df else merged(df, format, targetDir, mode), format, tmp))
+    val (units, emptied) =
+      if (whole) (Seq(""), Nil)
+      else {
+        val written = partitionDirsIn(tmp)
+        (written, alsoReplace.filterNot(written.contains))
+      }
+    AtomicWriter.install(fsOps, tmp, targetDir, units, emptied)
+    units.filter(_.nonEmpty)
   }
 
-  /** Partition-level merge path for the four partition load modes. */
-  private def mergePartitions(df: DataFrame, format: DataFormat,
-      targetDir: String, mode: LoadMode,
-      alsoReplace: Seq[String] = Seq.empty): Unit = {
-    require(targetPartitions.nonEmpty,
-      s"$mode requires target partitions")
-    val spark = df.sparkSession
-
-    // Merge with existing partition content when the mode asks for it.
-    val existing: Option[DataFrame] =
-      if (fsOps.exists(targetDir) &&
-          fsOps.ls(targetDir).exists(_.contains("=")))
-        Some(format.read(spark, Map("basePath" -> targetDir), None,
+  /** The incoming frame merged with the existing content the mode asks
+    * for. The existing table is read only by the modes that use it: the
+    * read runs parquet schema inference as a Spark job.
+    */
+  private def merged(df: DataFrame, format: DataFormat, targetDir: String,
+      mode: LoadMode): DataFrame = {
+    lazy val existing: Option[DataFrame] =
+      if (fsOps.ls(targetDir).exists(_.contains("=")))
+        Some(format.read(df.sparkSession, Map("basePath" -> targetDir), None,
           targetDir))
       else None
-
-    val toWrite: DataFrame = (mode, existing) match {
-      case (LoadMode.OverwritePartitions, _) => df
-      case (LoadMode.OverwritePartitionsWithAddedColumns, Some(ex)) =>
-        SchemaOps.addMissingColumns(df, ex.schema)
-      case (LoadMode.OverwritePartitionsWithAddedColumns, None) => df
-      case (LoadMode.AppendUnionPartitions, Some(ex)) =>
+    mode match {
+      case LoadMode.OverwritePartitions => df
+      case LoadMode.OverwritePartitionsWithAddedColumns =>
+        existing.fold(df)(ex => SchemaOps.addMissingColumns(df, ex.schema))
+      case LoadMode.AppendUnionPartitions =>
         // only the partitions present in df participate
-        val affected = affectedFilter(df)
-        df.unionByName(ex.filter(affected), allowMissingColumns = true)
-      case (LoadMode.AppendUnionPartitions, None) => df
-      case (LoadMode.AppendJoinPartitions, Some(ex)) =>
-        val affected = affectedFilter(df)
-        val common = df.columns.intersect(ex.columns).toSeq
-        df.join(ex.filter(affected), common, "full_outer")
-      case (LoadMode.AppendJoinPartitions, None) => df
-      case other => throw new IllegalStateException(other.toString)
-    }
-
-    val tmp = fsOps.timestampedDir(targetDir + "_tmp")
-    val backup = fsOps.timestampedDir(targetDir + "_backup")
-    try writeTo(toWrite, format, tmp) catch {
-      case e: Throwable => fsOps.deleteAll(tmp); throw e
-    }
-    val written = partitionDirsIn(tmp)
-    // deletion-only partitions: affected but with zero surviving rows —
-    // their old content must go even though tmp has no dir for them
-    val emptied = alsoReplace.filterNot(written.contains)
-      .filter(p => fsOps.exists(s"$targetDir/$p"))
-    val parts = written ++ emptied
-    val backedUp = parts.filter(p => fsOps.exists(s"$targetDir/$p"))
-    try {
-      backedUp.foreach(p => fsOps.move(s"$targetDir/$p", s"$backup/$p"))
-      written.foreach(p => fsOps.move(s"$tmp/$p", s"$targetDir/$p"))
-      fsOps.deleteAll(tmp)
-      fsOps.deleteAll(backup)
-    } catch {
-      case e: Throwable =>
-        // roll back to the pre-write state: newly installed partitions that
-        // had no previous content are removed; backed-up ones are restored
-        written.filterNot(backedUp.contains)
-          .foreach(p => fsOps.deleteAll(s"$targetDir/$p"))
-        backedUp.foreach { p =>
-          if (fsOps.exists(s"$backup/$p")) {
-            fsOps.deleteAll(s"$targetDir/$p")
-            fsOps.move(s"$backup/$p", s"$targetDir/$p")
-          }
+        existing.fold(df)(ex => df.unionByName(ex.filter(affectedFilter(df)),
+          allowMissingColumns = true))
+      case LoadMode.AppendJoinPartitions =>
+        existing.fold(df) { ex =>
+          val common = df.columns.intersect(ex.columns).toSeq
+          df.join(ex.filter(affectedFilter(df)), common, "full_outer")
         }
-        fsOps.deleteAll(tmp)
-        fsOps.deleteAll(backup)
-        throw e
+      case other => throw new IllegalStateException(other.toString)
     }
   }
 
   /** OR-of-ANDs filter selecting the partitions present in df. */
   private def affectedFilter(df: DataFrame): Column =
     PartitionCriteria.toColumn(PartitionCriteria.present(df, targetPartitions))
+}
+
+object AtomicWriter {
+
+  /** Run `body`, which lands new content under the temp tree `tmp`; if it
+    * throws, drop whatever it left there and rethrow.
+    */
+  private[graft] def land(fsOps: FsOps, tmp: String)(body: => Unit): Unit =
+    try body catch {
+      case e: Throwable =>
+        try fsOps.deleteAll(tmp) catch { case NonFatal(d) => e.addSuppressed(d) }
+        throw e
+    }
+
+  /** The one directory swap. `units` are paths relative to both `tmp` and
+    * `target` (`""` is the whole dir); `emptied` are units of `target` to
+    * remove without a replacement. Every existing unit of either list moves
+    * into a backup tree beside `target`, then each unit of `tmp` moves in.
+    *
+    * The commit point is the last of those moves. A failure before it
+    * puts every unit of `target` back as it was (installed units removed,
+    * backups moved back; a target that did not exist is removed) and
+    * rethrows, with any restore failure attached as suppressed;
+    * the backup tree is kept when the restore did not complete. After it,
+    * removing `tmp` and the backup tree is cleanup: it never rolls back and
+    * never fails the write.
+    */
+  private[graft] def install(fsOps: FsOps, tmp: String, target: String,
+      units: Seq[String], emptied: Seq[String]): Unit = {
+    def at(root: String, u: String) = if (u.isEmpty) root else s"$root/$u"
+    def quietly(step: => Unit): Unit = try step catch { case NonFatal(_) => }
+    val backup = fsOps.timestampedDir(target + "_backup")
+    val existed = fsOps.exists(target)
+    val olds = if (!existed) Nil
+      else (units ++ emptied).filter(u => u.isEmpty || fsOps.exists(at(target, u)))
+    var backedUp = List.empty[String]
+    var installing = List.empty[String]
+    try {
+      olds.foreach { u =>
+        fsOps.move(at(target, u), at(backup, u)); backedUp ::= u
+      }
+      units.foreach { u =>
+        installing ::= u; fsOps.move(at(tmp, u), at(target, u))
+      }
+    } catch {
+      case e: Throwable =>
+        var restored = true
+        def restore(step: => Unit): Unit =
+          try step catch { case NonFatal(r) => restored = false; e.addSuppressed(r) }
+        if (!existed) restore(fsOps.deleteAll(target))
+        else {
+          installing.foreach(u => restore(fsOps.deleteAll(at(target, u))))
+          backedUp.foreach(u => restore(fsOps.move(at(backup, u), at(target, u))))
+        }
+        quietly(fsOps.deleteAll(tmp))
+        if (restored && backedUp.nonEmpty) quietly(fsOps.deleteAll(backup))
+        throw e
+    }
+    // a whole-dir install moved `tmp` itself
+    if (!units.contains("")) quietly(fsOps.deleteAll(tmp))
+    if (backedUp.nonEmpty) quietly(fsOps.deleteAll(backup))
+  }
 }

@@ -15,7 +15,9 @@ import scala.jdk.CollectionConverters._
   *    evicted;
   *  - files are published (hard-linked or renamed into place) only
   *    through `FsOps`, so a fault-injecting `FsOps` reaches every
-  *    publication.
+  *    publication;
+  *  - directories are swapped (backup, install, restore) only by
+  *    `AtomicWriter.install`, the one routine with a single commit point.
   */
 class ConfHygieneSpec extends AnyFunSuite with Matchers {
   private val rules = Seq(
@@ -26,7 +28,9 @@ class ConfHygieneSpec extends AnyFunSuite with Matchers {
         "LogicalRDD"),
       Set("graft/core/Pin.scala")),
     ("src/main/scala links and renames files only in fsops/FsOps.scala",
-      Seq("createLink(", ".rename("), Set("graft/fsops/FsOps.scala")))
+      Seq("createLink(", ".rename("), Set("graft/fsops/FsOps.scala")),
+    ("src/main/scala moves directories only in io/AtomicWriter.scala",
+      Seq(".move("), Set("graft/io/AtomicWriter.scala")))
 
   private lazy val sources: Seq[Path] = {
     val root = Paths.get("src/main/scala")

@@ -179,6 +179,34 @@ class AppendLoadSpec extends SparkSpec {
       (1, "a", "20180422"), (2, "b", "20180422"), (3, "c", "20180423"))
   }
 
+  test("an integer partition with a zero-padded capture finds the header " +
+      "its first load wrote") {
+    val landing = tmp("al_int"); val header = tmp("al_int_h")
+    val target = tmp("al_int_tgt") + "/t"
+    val file = java.nio.file.Paths.get(landing, "sales_2024_06.psv")
+    def params(schema: StructType) = AppendLoadParams(
+      sourceDir = landing, targetDir = target, headerDir = header,
+      format = DataFormat.Dsv("|"), targetSchema = schema,
+      partitionRegexes = Seq("sales_(\\d{4})_\\d{2}", "sales_\\d{4}_(\\d{2})"),
+      targetPartitions = Seq("year", "month"))
+    val v1 = StructType(Seq(
+      StructField("id", IntegerType), StructField("v", StringType),
+      StructField("year", IntegerType), StructField("month", IntegerType)))
+    java.nio.file.Files.writeString(file, "1|a\n")
+    new AppendLoad(spark, fsOps, params(v1)).run()
+    // Spark names the partition by the typed value: month=6, not month=06
+    assert(fsOps.exists(s"$header/year=2024/month=6/header.json"))
+    // the same partition under a target schema with one more column: the
+    // header pinned by the first load (id, v) must govern the read
+    java.nio.file.Files.writeString(file, "2|b\n")
+    val v2 = StructType(v1.fields.patch(2,
+      Seq(StructField("w", StringType)), 0))
+    new AppendLoad(spark, fsOps, params(v2)).run()
+    val part = spark.read.parquet(s"$target/year=2024/month=6")
+    part.columns.toSeq shouldBe Seq("id", "v")
+    part.as[(Int, String)].collect() shouldBe Array((2, "b"))
+  }
+
   test("a source under a dot-directory lands every row; hidden files and " +
       "_SUCCESS below source_dir are skipped") {
     val landing = tmp("al_dot") + "/.staging/landing"

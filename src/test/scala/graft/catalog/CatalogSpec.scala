@@ -150,6 +150,51 @@ class CatalogOpsSpec extends SparkSpec {
     after.values.sum shouldBe 1000L
   }
 
+  test("a reader at compaction's install move sees only the table's own " +
+      "partitions and the original row count") {
+    import graft.fsops.FsOps
+    val dir = tmp("cmp_vis") + "/t"
+    spark.range(100).selectExpr("id AS v", "IF(id < 60, 'p1', 'p2') AS p")
+      .repartition(4).write.partitionBy("p").parquet(dir)
+    var seen = Seq.empty[(Seq[String], Long)]
+    // observes the table right after every move that lands inside it
+    val observing = new FsOps(spark.sparkContext.hadoopConfiguration) {
+      override def move(src: String, dest: String): Unit = {
+        super.move(src, dest)
+        if (dest.startsWith(dir + "/"))
+          seen :+= (ls(dir).filter(_.contains("=")).sorted ->
+            spark.read.parquet(dir).count())
+      }
+    }
+    CatalogOps.compactPartitions(spark, observing, dir, Seq("p=p1"), 1)
+    seen should not be empty
+    seen.foreach(_ shouldBe (Seq("p=p1", "p=p2") -> 100L))
+    observing.ls(s"$dir/p=p1").count(_.endsWith(".parquet")) shouldBe 1
+  }
+
+  test("a move fault during compaction leaves every partition's content " +
+      "and file layout as they were") {
+    import graft.fsops.{FailingFsOps, FsOps}
+    val fsOps = new FsOps(spark.sparkContext.hadoopConfiguration)
+    val root = tmp("cmp_fault")
+    val dir = root + "/t"
+    spark.range(1000).selectExpr("id AS v", "concat('g', id % 4) AS p")
+      .repartition(6).write.partitionBy("p").parquet(dir)
+    val parts = (0 until 4).map(i => s"p=g$i")
+    def layout = parts.map(p => p -> fsOps.ls(s"$dir/$p").sorted)
+    def content = spark.read.parquet(dir).as[(Long, String)].collect().sorted
+    val (layoutBefore, contentBefore) = (layout, content)
+    // the third partition's install move fails; two are already in
+    val failing = new FailingFsOps(spark.sparkContext.hadoopConfiguration,
+      _ == s"$dir/p=g2")()
+    an[java.io.IOException] should be thrownBy
+      CatalogOps.compactPartitions(spark, failing, dir, parts, 1,
+        maxConcurrent = 4)
+    layout shouldBe layoutBefore
+    content shouldBe contentBefore
+    fsOps.ls(root) shouldBe Seq("t") // no temp or backup tree left behind
+  }
+
   test("runConcurrently genuinely overlaps work and still rethrows " +
       "the first failure after waiting for all items") {
     // two items each block until the OTHER has started: passes only if

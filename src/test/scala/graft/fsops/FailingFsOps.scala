@@ -2,9 +2,9 @@ package graft.fsops
 
 import org.apache.hadoop.conf.Configuration
 
-/** FsOps with ONE injected fault: the first `move` or `publishExclusive`
-  * whose destination satisfies `at` runs `fault(dest)` before the call
-  * proceeds. The default fault throws, an FS failure mid-operation; a
+/** FsOps with ONE injected fault: the first `move`, `publishExclusive` or
+  * `deleteAll` whose destination (for `deleteAll`, the deleted path)
+  * satisfies `at` runs `fault(dest)` before the call proceeds. The default fault throws, an FS failure mid-operation; a
   * fault that publishes another writer's file at `dest` makes the call
   * lose a race instead. One-shot, so rollback, cleanup and retry see a
   * healthy FS (a persistent outage would defeat any restore logic).
@@ -21,5 +21,8 @@ class FailingFsOps(conf: Configuration, at: String => Boolean)(
   }
   override def publishExclusive(p: String, content: String): Boolean = {
     inject(p); super.publishExclusive(p, content)
+  }
+  override def deleteAll(p: String): Unit = {
+    inject(p); super.deleteAll(p)
   }
 }

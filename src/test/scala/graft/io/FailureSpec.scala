@@ -68,4 +68,39 @@ class AtomicWriterFailureSpec extends SparkSpec {
     spark.read.parquet(dir).as[(Int, String)].collect() shouldBe
       Array((1, "a"))
   }
+
+  /** An FsOps whose one fault hits the first call on an existing backup
+    * tree beside `dir`: its removal after the last install move (the
+    * backup moves create their destinations, so they never match).
+    */
+  private def failingBackupRemoval(dir: String) = {
+    val fs = new FsOps(spark.sparkContext.hadoopConfiguration)
+    new FailingFsOps(spark.sparkContext.hadoopConfiguration,
+      d => d.startsWith(dir + "_backup_") && fs.exists(d))()
+  }
+
+  test("partition write: a fault removing the backup after the last " +
+      "install move leaves the new content and does not throw") {
+    val dir = tmp("awf4") + "/t"
+    new AtomicWriter(new FsOps(spark.sparkContext.hadoopConfiguration),
+      Seq("p"), None).write(Seq((1, "p1"), (5, "p2")).toDF("v", "p"),
+      DataFormat.Parquet, dir, LoadMode.OverwritePartitions)
+    new AtomicWriter(failingBackupRemoval(dir), Seq("p"), None).write(
+      Seq((2, "p1")).toDF("v", "p"), DataFormat.Parquet, dir,
+      LoadMode.OverwritePartitions) shouldBe Seq("p=p1")
+    readTarget(dir) shouldBe Array((2, "p1"), (5, "p2"))
+  }
+
+  test("whole-table write: a fault removing the backup after the last " +
+      "install move leaves the new content and does not throw") {
+    val dir = tmp("awf5") + "/t"
+    new AtomicWriter(new FsOps(spark.sparkContext.hadoopConfiguration),
+      Seq.empty, Some(1)).write(Seq((1, "a")).toDF("k", "x"),
+      DataFormat.Parquet, dir, LoadMode.OverwriteTable)
+    new AtomicWriter(failingBackupRemoval(dir), Seq.empty, Some(1)).write(
+      Seq((2, "b")).toDF("k", "x"), DataFormat.Parquet, dir,
+      LoadMode.OverwriteTable) shouldBe Seq.empty
+    spark.read.parquet(dir).as[(Int, String)].collect() shouldBe
+      Array((2, "b"))
+  }
 }
